@@ -3,7 +3,7 @@ package graft.plans
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.TimeUnit
 
 /** CROSS-PROCESS optimistic-concurrency proof: two real JVMs (not
@@ -17,28 +17,8 @@ class TxLogCrossProcessSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def fork(args: Seq[String], out: java.io.File): Process = {
-    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val cp = new java.io.File("target/scala-2.13/classes").getAbsolutePath +
-      ":/opt/spark/jars/*"
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false",
-      "-cp", cp, "graft.tools.TxLogRaceChild") ++ args
-    new ProcessBuilder(cmd: _*)
-      .redirectErrorStream(true)
-      .redirectOutput(out)
-      .start()
-  }
+  private def fork(args: Seq[String], out: java.io.File): Process =
+    ChildJvm.fork("graft.tools.TxLogRaceChild", args, out)
 
   test("two JVMs racing 110+ appends and compactions: serializable history, " +
       "zero lost commits") {
