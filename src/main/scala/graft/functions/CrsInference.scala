@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{BinaryType, StringType}
+import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.locationtech.jts.geom.Geometry
 
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.util.Try
 
 /** CRS inference from sampled geometry data — the Spark port of the
@@ -11,14 +11,17 @@ import scala.util.Try
   *
   * The reference tries, per geometry column: direct-WKB → hex-WKB → WKT
   * centroid extraction over a `LIMIT 10` sample, then guesses the CRS from
-  * the min/max coordinate ranges. Here each probe is a
-  * `filter(isNotNull).limit(10)` job whose collect brings back AT MOST 10
-  * (x, y) doubles — the 100 TB safety property: driver traffic is bounded
-  * by a constant regardless of table size, and Spark pushes the limit into
-  * the scan (CollectLimitExec reads only the first partitions that satisfy
-  * it).
+  * the min/max coordinate ranges. Here the sample is at most [[SampleSize]]
+  * non-null raw values per column, read by the caller on the driver from
+  * the head of the source (GeoParquet.headValues for parquet), and the
+  * chain runs over them with the scalar JTS kernels — no DataFrame, no
+  * job. Driver traffic stays bounded by a constant regardless of table
+  * size.
   */
 object CrsInference {
+
+  /** The reference's `LIMIT 10` probe sample (geo_strategy.rs:97, 144). */
+  val SampleSize = 10
 
   /** Range heuristics, verbatim port of `infer_crs_from_ranges`
     * (geo_strategy.rs:228-253) including its quirks: small-extent lon/lat
@@ -35,27 +38,15 @@ object CrsInference {
     else "4326"
   }
 
-  /** One probe: parse `geomCol` with the given centroid extractors over a
-    * 10-row non-null sample; None when no finite coordinate comes back
-    * (mirrors extract_coordinates_from_query, geo_strategy.rs:186-225). */
-  private def probe(
-      df: DataFrame,
-      geomCol: String,
-      cx: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      cy: org.apache.spark.sql.Column => org.apache.spark.sql.Column): Option[String] = {
-    val rows = Try {
-      df.filter(col(geomCol).isNotNull)
-        .limit(10)
-        .select(cx(col(geomCol)).as("x"), cy(col(geomCol)).as("y"))
-        .collect()
-    }.getOrElse(Array.empty)
-    val coords = rows.iterator.flatMap { r =>
-      if (r.isNullAt(0) || r.isNullAt(1)) None
-      else {
-        val x = r.getDouble(0); val y = r.getDouble(1)
-        if (x.isFinite && y.isFinite) Some((x, y)) else None
-      }
-    }.toSeq
+  /** One probe: parse each sampled value and take its centroid; None when
+    * no finite coordinate comes back (mirrors
+    * extract_coordinates_from_query, geo_strategy.rs:186-225). Unparseable
+    * and empty geometries yield no coordinate, as `ST_X(ST_Centroid(…))`
+    * yields NULL for them. */
+  private def probe[A](sample: Seq[A], parse: A => Option[Geometry]): Option[String] = {
+    val coords = sample.flatMap { v =>
+      parse(v).flatMap(g => Try(GeoFunctions.centroid(g)).toOption)
+    }.filter { case (x, y) => x.isFinite && y.isFinite }
     if (coords.isEmpty) None
     else {
       val xs = coords.map(_._1); val ys = coords.map(_._2)
@@ -64,29 +55,26 @@ object CrsInference {
   }
 
   /** `analyse_geometry_column` (geo_strategy.rs:90-183): a column-type-aware
-    * WKB → hex-WKB → WKT fallback chain. Binary columns try WKB only;
-    * string columns try hex-WKB then WKT (a binary parse of a text column
-    * can't succeed, so skipping it mirrors, not changes, the outcome). */
-  def analyseGeometryColumn(df: DataFrame, geomCol: String): Option[String] = {
-    import GeoFunctions._
-    val dt = df.schema(geomCol).dataType
-    val probes: Seq[() => Option[String]] = dt match {
-      case BinaryType =>
-        Seq(() => probe(df, geomCol, centroidXFromWkb(_), centroidYFromWkb(_)))
+    * WKB → hex-WKB → WKT fallback chain over one column's sample (raw
+    * values as stored; text as its UTF-8 bytes). Binary columns try WKB
+    * only; string columns try hex-WKB then WKT (a binary parse of a text
+    * column can't succeed, so skipping it mirrors, not changes, the
+    * outcome). */
+  def analyseGeometryColumn(dataType: DataType, sample: Seq[Array[Byte]]): Option[String] =
+    dataType match {
+      case BinaryType => probe(sample, GeoFunctions.parseWkb)
       case StringType =>
-        Seq(
-          () => probe(df, geomCol, centroidXFromHex(_), centroidYFromHex(_)),
-          () => probe(df, geomCol, centroidXFromWkt, centroidYFromWkt))
-      case _ => Seq.empty
+        val text = sample.map(new String(_, UTF_8))
+        probe(text, GeoFunctions.parseHexWkb).orElse(probe(text, GeoFunctions.parseWkt))
+      case _ => None
     }
-    probes.iterator.map(_()).collectFirst { case Some(crs) => crs }
-  }
 
   /** `infer_parquet_crs_from_data` (geo_strategy.rs:75-87): first column
-    * that yields an answer wins; fallback WGS84. */
-  def inferCrs(df: DataFrame, geomColumns: Seq[String]): String =
+    * that yields an answer wins; fallback WGS84. `sample` reads a column's
+    * ≤ [[SampleSize]] values and is called lazily, column by column. */
+  def inferCrs(geomColumns: Seq[(String, DataType)], sample: String => Seq[Array[Byte]]): String =
     geomColumns.iterator
-      .map(analyseGeometryColumn(df, _))
+      .map { case (name, dt) => analyseGeometryColumn(dt, sample(name)) }
       .collectFirst { case Some(crs) => crs }
       .getOrElse("4326")
 }

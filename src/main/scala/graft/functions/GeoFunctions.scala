@@ -108,14 +108,7 @@ object GeoFunctions {
   /** WKT → normalized 2D WKT (identity parse, invalid → NULL). */
   def stAsTextFromWkt(c: Column): Column = toCol(StAsTextFromWkt(toExpr(c)))
 
-  /** Centroid X/Y from the bounded CRS-probe encodings
-    * (geo_strategy.rs:135-183); the WKT pair is the hot declared-query
-    * path and runs native, the WKB/hex pair only ever feeds the ≤10-row
-    * driver probe and stays a plain UDF. */
-  val centroidXFromWkb = udf((b: Array[Byte]) => parseWkb(b).map(_.getCentroid.getX))
-  val centroidYFromWkb = udf((b: Array[Byte]) => parseWkb(b).map(_.getCentroid.getY))
-  val centroidXFromHex = udf((s: String) => parseHexWkb(s).map(_.getCentroid.getX))
-  val centroidYFromHex = udf((s: String) => parseHexWkb(s).map(_.getCentroid.getY))
+  /** Centroid X/Y of a WKT geometry (NULL on parse failure). */
   def centroidXFromWkt(c: Column): Column = toCol(CentroidFromWkt(toExpr(c), axisX = true))
   def centroidYFromWkt(c: Column): Column = toCol(CentroidFromWkt(toExpr(c), axisX = false))
 

@@ -25,8 +25,12 @@ final case class IngestJob(
   * Where the reference materializes staging tables (`data`,
   * `transformed_data`) inside DuckDB, everything here stays a single lazy
   * Catalyst plan until the sink action: at 100 TB that is the difference
-  * between two full materializations and zero. The only driver-side data
-  * movement is the bounded ≤10-row CRS probe (CrsInference).
+  * between two full materializations and zero. Planning reads bounded
+  * prefixes on the driver — the CSV dialect + type sample (≤ 20,480
+  * lines, CsvDialect), one parquet footer (GeoParquet.readParquet), the
+  * ≤10-value CRS probe sample (GeoParquet.headValues), container headers
+  * — so a CSV or parquet ingest runs exactly one Spark job: the sink
+  * write.
   */
 object IngestPipeline {
 
@@ -88,20 +92,17 @@ object IngestPipeline {
     fileType match {
       case FileType.Parquet =>
         // detection sees PAR1 either way; GeoParquet is parquet whose
-        // footer declares its geometry — one driver-side footer probe
-        // routes it so the declared CRS (not the row probe) drives the
-        // transform, and the data path stays Spark's parquet source
-        if (graft.sources.GeoParquet.isGeoParquet(path))
-          graft.sources.GeoParquet.read(spark, path)
-        else spark.read.parquet(path)
+        // footer declares its geometry — the one driver-side footer open
+        // gives the schema (no inference job) and routes it so the
+        // declared CRS (not the row probe) drives the transform
+        graft.sources.GeoParquet.readParquet(spark, path)
       case FileType.Csv =>
-        // header+infer+tolerate mirrors read_csv(ignore_errors, header);
-        // the bounded-prefix dialect sniff mirrors DuckDB's delimiter
-        // auto-detection (semicolon/tab exports would otherwise load as
-        // one mangled column) — driver-side, one 16 KB read, no job
-        spark.read.option("header", true).option("inferSchema", true)
-          .option("sep", graft.sources.CsvDialect.sniffSeparator(path))
-          .option("mode", "DROPMALFORMED").csv(path)
+        // header + tolerate mirrors read_csv(ignore_errors, header); the
+        // dialect sniff and the types come from one bounded driver-side
+        // read, as DuckDB's sniffer samples (no header or inference job)
+        val sample = graft.sources.CsvDialect.sample(spark, path)
+        spark.read.schema(sample.schema)
+          .options(graft.sources.CsvDialect.readerOptions(sample.sep)).csv(path)
       case FileType.Geojson =>
         graft.sources.GeoJsonReader.read(spark, path)
       case FileType.Excel =>
@@ -175,13 +176,17 @@ object IngestPipeline {
       prjCrs(sourcePath).getOrElse("4326")
     case FileType.Parquet =>
       // a GeoParquet footer DECLARES its CRS (stamped into the schema by
-      // the reader) — declaration beats the ≤10-row probe; plain parquet
-      // still goes through the reference-mirrored inference chain
+      // the reader) — declaration beats the ≤10-value probe; plain parquet
+      // still goes through the reference-mirrored inference chain, over
+      // values read on the driver from the head of the file(s)
       df.schema.fields
         .find(f => f.metadata.contains(graft.sources.GeoParquet.CrsTag))
         .map(_.metadata.getString(graft.sources.GeoParquet.CrsTag)
           .stripPrefix("EPSG:"))
-        .getOrElse(CrsInference.inferCrs(df, geometry.names))
+        .getOrElse(CrsInference.inferCrs(
+          geometry.names.map(g => g -> df.schema(g).dataType),
+          graft.sources.GeoParquet.headValues(df.sparkSession, sourcePath, _,
+            CrsInference.SampleSize)))
     case FileType.Csv | FileType.Excel | FileType.Arrow =>
       "4326" // geo_strategy.rs:48-54 — hard default for tabular sources
               // (Arrow carries no CRS metadata — same tabular stance)

@@ -1,13 +1,21 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer => ParquetFooter, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageTypeParser
+import org.apache.parquet.schema.{MessageType, MessageTypeParser, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{MetadataBuilder, StructType}
+
+import scala.collection.mutable
 
 /** GeoParquet 1.0.0 (the OGC-track public spec: ordinary parquet plus a
   * `geo` key in the footer key-value metadata describing geometry
@@ -15,14 +23,16 @@ import org.apache.spark.sql.types.MetadataBuilder
   * reference's GDAL path would hand to `st_read` for .parquet geodata;
   * beyond the reference's own six detected types, same as KML/GML.
   *
-  * Read shape: the footer metadata is a DRIVER-side constant-size read
-  * (one parquet footer — bytes, not data); the data scan is Spark's own
-  * parquet source, so column pruning, predicate pushdown, row-group
-  * skipping, and distributed scan tasks all come free — at 100 TB the
-  * geometry annotation costs one footer probe per table, not a custom
-  * connector. The primary geometry column is stamped with
+  * Read shape: ONE driver-side footer open per read (bytes, not data)
+  * yields both the `geo` key and the Spark schema, so the scan is
+  * Spark's own parquet source with a given schema — no schema-inference
+  * job — and column pruning, predicate pushdown, row-group skipping, and
+  * distributed scan tasks all come free. Plain parquet reads the same
+  * way ([[readParquet]]). The primary geometry column is stamped with
   * [[SchemaHeuristics.GeometryTag]] + [[GeoParquet.CrsTag]] (the
   * GeoPackage/GML contract, so IngestPipeline's CRS resolve composes).
+  * Plain parquet's CRS probe reads its ≤10-value sample on the driver
+  * too ([[headValues]]).
   *
   * The writer half exists for fixtures and the sink tier: Spark cannot
   * attach custom footer metadata through its public writer, so rows go
@@ -30,8 +40,9 @@ import org.apache.spark.sql.types.MetadataBuilder
   * dimension-sized tables a sink writes back (the corpus-sized path
   * stays `df.write.parquet`).
   *
-  * Spec details honored: missing `geo` key fails loudly (the file is
-  * plain parquet — a caller wanting that uses the parquet reader);
+  * Spec details honored: missing `geo` key fails loudly in [[read]]
+  * (the file is plain parquet — a caller wanting that uses
+  * [[readParquet]]);
   * `encoding` must be "WKB"; absent `crs` defaults to OGC:CRS84
   * (per spec §crs), which we surface as EPSG:4326 lon-lat.
   */
@@ -65,7 +76,7 @@ object GeoParquet {
          |"crs":{"type":"GeographicCRS","id":{"authority":"EPSG","code":$epsg}},
          |"bbox":[${xs.min},${ys.min},${xs.max},${ys.max}]}}}""".stripMargin
       .replace("\n", "")
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = new Configuration()
     // idempotent like the other fixture writers: re-planning a query in
     // the same session rewrites the container (file + hadoop .crc twin)
     val f = new java.io.File(path)
@@ -85,26 +96,93 @@ object GeoParquet {
     } finally writer.close()
   }
 
-  /** Raw `geo` footer value, if the file is parquet and declares one. */
-  def geoMetadata(path: String): Option[String] = {
-    val f = new java.io.File(path)
-    if (!f.isFile) None
-    else scala.util.Try {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
-      try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData.get("geo"))
-      finally rd.close()
-    }.toOption.flatten
+  /** The Spark schema and `geo` key of the footer Spark's non-merging
+    * schema inference would read for `path` (`_common_metadata`, else
+    * `_metadata`, else the first data file in path order), opened once on
+    * the driver with the session's Hadoop conf
+    * (`ParquetFileFormat.readSchemaFromFooter`, with the converter Spark's
+    * inference builds from the session's SQLConf). */
+  private def footer(s: SparkSession, path: String): (StructType, Option[String]) = {
+    val conf = s.sessionState.newHadoopConf()
+    val leaves = listLeaves(conf, path)
+    val file = leaves.find(_.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(leaves.find(_.getName == ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(leaves.find(!isSummary(_)))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet file under '$path'"))
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    val meta = try rd.getFooter finally rd.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(new ParquetFooter(file, meta),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    (schema, Option(meta.getFileMetaData.getKeyValueMetaData.get("geo")))
   }
 
-  /** The ingest dispatch probe: parquet that declares geometry. */
-  def isGeoParquet(path: String): Boolean = geoMetadata(path).isDefined
+  /** Files under `path` as Spark's file index lists them, sorted by path:
+    * names starting `_` or `.` are hidden (partition directories `_k=v`
+    * and the two summary files excepted). */
+  private def listLeaves(conf: Configuration, path: String): Seq[Path] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String) =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE) &&
+        !name.startsWith(ParquetFileWriter.PARQUET_METADATA_FILE)
+    def walk(st: FileStatus): Seq[Path] =
+      if (st.isFile) Seq(st.getPath)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(fs.getFileStatus(root)).sortBy(_.toString)
+  }
 
-  /** Resolve the `geo` footer metadata of one container file. */
-  private def footerGeo(path: String): (String, String) = {
-    val geo = geoMetadata(path).orNull
-    require(geo != null,
-      s"$path carries no GeoParquet 'geo' footer metadata — read it as plain parquet")
+  private def isSummary(p: Path): Boolean =
+    p.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE ||
+      p.getName == ParquetFileWriter.PARQUET_METADATA_FILE
+
+  /** Up to `n` non-null values of the top-level column `column`, read on
+    * the driver from the head of the data file(s) under `path` in path
+    * order, row group by row group: the bounded sample a
+    * `filter(isNotNull).limit(n)` would return, without a job. Values are
+    * the stored bytes (a string column's UTF-8). Files whose `column` is
+    * absent or not BINARY contribute nothing. */
+  def headValues(s: SparkSession, path: String, column: String, n: Int): Seq[Array[Byte]] = {
+    val conf = s.sessionState.newHadoopConf()
+    val out = mutable.ArrayBuffer.empty[Array[Byte]]
+    val files = listLeaves(conf, path).filterNot(isSummary).iterator
+    while (out.size < n && files.hasNext) {
+      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(files.next(), conf))
+      try {
+        val fileMeta = rd.getFooter.getFileMetaData
+        val schema = fileMeta.getSchema
+        val field = Option.when(schema.containsField(column))(
+          schema.getType(schema.getFieldIndex(column)))
+        if (field.exists(f => f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName ==
+            PrimitiveType.PrimitiveTypeName.BINARY)) {
+          val projection = new MessageType(schema.getName, field.get)
+          val desc = projection.getColumns.get(0)
+          rd.setRequestedSchema(projection)
+          var rowGroup = rd.readNextRowGroup()
+          while (rowGroup != null) {
+            val values = new ColumnReadStoreImpl(rowGroup,
+              new GroupRecordConverter(projection).getRootConverter, projection,
+              fileMeta.getCreatedBy).getColumnReader(desc)
+            var i = 0L
+            while (i < rowGroup.getRowCount && out.size < n) {
+              if (values.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel)
+                out += values.getBinary.getBytes
+              values.consume()
+              i += 1
+            }
+            rowGroup = if (out.size < n) rd.readNextRowGroup() else null
+          }
+        }
+      } finally rd.close()
+    }
+    out.toSeq
+  }
+
+  /** The primary column name and CRS a `geo` footer value declares. */
+  private def parseGeo(path: String, geo: String): (String, String) = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(geo)
     val primary = root.path("primary_column").asText("")
@@ -123,16 +201,28 @@ object GeoParquet {
     (primary, crs)
   }
 
-  /** Read a GeoParquet file: Spark's parquet scan with the primary
-    * geometry column tagged (GeometryTag + CrsTag). */
+  /** Read parquet at `path`, plain or GeoParquet, from one driver footer
+    * open and no job: Spark's parquet scan with the footer's schema; a
+    * GeoParquet footer's primary geometry column is tagged (GeometryTag +
+    * CrsTag). */
+  def readParquet(s: SparkSession, path: String): DataFrame = {
+    val (schema, geoKey) = footer(s, path)
+    val df = s.read.schema(schema).parquet(path)
+    geoKey.fold(df) { geo =>
+      val (primary, crs) = parseGeo(path, geo)
+      require(df.schema.fieldNames.contains(primary),
+        s"$path: primary_column '$primary' absent from parquet schema")
+      df.withMetadata(primary, new MetadataBuilder()
+        .putBoolean(SchemaHeuristics.GeometryTag, true)
+        .putString(CrsTag, crs).build())
+    }
+  }
+
+  /** Read a GeoParquet file; plain parquet fails loudly. */
   def read(s: SparkSession, path: String): DataFrame = {
-    val (primary, crs) = footerGeo(path)
-    val df = s.read.parquet(path)
-    require(df.schema.fieldNames.contains(primary),
-      s"$path: primary_column '$primary' absent from parquet schema")
-    val meta = new MetadataBuilder()
-      .putBoolean(SchemaHeuristics.GeometryTag, true)
-      .putString(CrsTag, crs).build()
-    df.withMetadata(primary, meta)
+    val df = readParquet(s, path)
+    require(df.schema.exists(_.metadata.contains(CrsTag)),
+      s"$path carries no GeoParquet 'geo' footer metadata — read it as plain parquet")
+    df
   }
 }

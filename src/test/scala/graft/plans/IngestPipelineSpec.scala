@@ -781,4 +781,99 @@ class IngestPipelineSpec extends AnyFunSuite {
       .split(" ").map(_.toDouble)
     assert(math.abs(x - 0.0) < 0.01 && math.abs(y - 51.478) < 0.01, wkt)
   }
+
+  // ------------------------------------------- one Spark job per ingest
+
+  private val JobTag = "graft.spec.ingest"
+
+  /** Spark jobs started by `body` on this thread (tagged through a local
+    * property), counted after the listener bus has drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(JobTag) == tag)
+          started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(JobTag, tag)
+    try {
+      body
+      org.apache.spark.graftbridge.ListenerDrain.drain(sc)
+    } finally {
+      sc.setLocalProperty(JobTag, null)
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("processFileToParquet runs exactly one Spark job: csv, plain WKB parquet, GeoParquet") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir
+    val csv = writeFile(dir, "pts.csv",
+      "id,longitude,latitude\n1,-0.1,51.5\n2,2.35,48.85\n".getBytes("UTF-8"))
+    // spherical-Mercator points: the row probe must find 3857
+    val wkb = (x: Double, y: Double) =>
+      graft.functions.GeoFunctions.toWkb(graft.functions.GeoFunctions.point(x, y))
+    val plain = dir.resolve("merc.parquet").toString
+    spark.createDataFrame(Seq(
+        org.apache.spark.sql.Row(1L, wkb(-11131.95, 6711533.0)),
+        org.apache.spark.sql.Row(2L, wkb(261600.0, 6250000.0))).asJava,
+      StructType(Seq(StructField("id", LongType), StructField("geom", BinaryType))))
+      .coalesce(1).write.parquet(plain)
+    val geo = dir.resolve("decl.parquet").toString
+    GeoParquet.write(geo, Seq((7L, "Greenwich", 538890.0, 177320.0)), 27700)
+    val out = dir.resolve("out").toString
+    for ((path, crs) <- Seq(csv -> "4326", plain -> "3857", geo -> "27700")) {
+      var res: IngestPipeline.Result = null
+      val jobs = jobsOf {
+        res = graft.Graft.processFileToParquet(spark, path, new java.io.File(path).getName, out)
+      }
+      assert(jobs == 1, s"$path ran $jobs Spark jobs")
+      assert(res.crs.contains(crs), s"$path: ${res.crs}")
+    }
+    assert(spark.read.parquet(s"$out/public/merc").count() == 2)
+  }
+
+  // ------------------------------------------------- directory inputs
+
+  test("a partitionBy parquet directory plans with its partition column, schema and rows") {
+    import scala.jdk.CollectionConverters._
+    val wkb = (x: Double, y: Double) =>
+      graft.functions.GeoFunctions.toWkb(graft.functions.GeoFunctions.point(x, y))
+    val rows = (1 to 30).map(i =>
+      org.apache.spark.sql.Row(i.toLong, s"n$i", wkb(-0.5 + i * 0.01, 51.0), i % 3))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("name", StringType),
+      StructField("geom", BinaryType), StructField("part", IntegerType)))
+    val path = tmpDir.resolve("by_part").toString
+    spark.createDataFrame(rows.asJava, schema).write.partitionBy("part").parquet(path)
+    assert(FileTypeDetector.detect(path) == Right(FileType.Parquet))
+    val read = IngestPipeline.read(spark, path, FileType.Parquet)
+    assert(read.schema == spark.read.parquet(path).schema)
+    assert(read.columns.last == "part")
+    val res = IngestPipeline.plan(spark, IngestJob(path, "by_part", "s"))
+    assert(res.geometry.names == Seq("geom"))
+    assert(res.crs.contains("4326"))
+    assert(res.transformed.columns.toSeq == Seq("id", "name", "part", "geom_wkt"))
+    assert(res.transformed.count() == 30)
+    assert(res.transformed.filter("part = 2").count() == 10)
+  }
+
+  test("a two-part CSV directory plans with the first part's sample, schema and all rows") {
+    val path = tmpDir.resolve("parts_csv").toString
+    import spark.implicits._
+    (1 to 40).map(i => (i, s"n$i", -0.5 + i * 0.01, 51.0 + i * 0.01))
+      .toDF("id", "name", "lon", "lat").repartition(2)
+      .write.option("header", true).csv(path)
+    val parts = new java.io.File(path).listFiles().filter(_.getName.endsWith(".csv"))
+    assert(parts.length == 2)
+    assert(FileTypeDetector.detect(path) == Right(FileType.Csv))
+    val res = IngestPipeline.plan(spark, IngestJob(path, "parts_csv", "s"))
+    assert(res.transformed.schema.take(4).map(f => f.name -> f.dataType) == Seq(
+      "id" -> IntegerType, "name" -> StringType, "lon" -> DoubleType, "lat" -> DoubleType))
+    assert(res.geometry.coordinatePair.contains(("lon", "lat")))
+    assert(res.transformed.count() == 40)
+  }
 }

@@ -1,12 +1,16 @@
 package graft.sources
 
+import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bounded-prefix CSV dialect sniffer (DuckDB's auto-detection
   * shape): quote-aware consistent-field-count scoring. */
 class CsvDialectSpec extends AnyFunSuite {
 
+  private lazy val spark = TestSpark.spark
+
   private def sniff(s: String): Char = CsvDialect.sniffSeparatorIn(s)
+  private def sniffFile(path: String): String = CsvDialect.sample(spark, path).sep
 
   test("detects each candidate dialect from consistent field counts") {
     assert(sniff("a,b,c\n1,2,3\n4,5,6\n") == ',')
@@ -45,22 +49,22 @@ class CsvDialectSpec extends AnyFunSuite {
     val p = java.nio.file.Files.createTempFile("dialect", ".csv")
     p.toFile.deleteOnExit()
     java.nio.file.Files.writeString(p, "k;v;w\n1;x;y\n2;z;q\n")
-    assert(CsvDialect.sniffSeparator(p.toString) == ";")
+    assert(sniffFile(p.toString) == ";")
   }
 
   test("the sniff is a pure optimization: unreadable paths fall back, directories probe a member") {
     // nonexistent path / glob: spark.read.csv may still resolve it — the
     // probe must not throw first
-    assert(CsvDialect.sniffSeparator("/no/such/file.csv") == ",")
-    assert(CsvDialect.sniffSeparator("/tmp/*.csv-glob-not-a-file") == ",")
+    assert(sniffFile("/no/such/file.csv") == ",")
+    assert(sniffFile("/tmp/*.csv-glob-not-a-file") == ",")
     // a directory of part files sniffs the first regular member,
     // skipping _SUCCESS-style markers and dotfiles
     val dir = java.nio.file.Files.createTempDirectory("dialectdir")
     java.nio.file.Files.writeString(dir.resolve("_SUCCESS"), "")
     java.nio.file.Files.writeString(dir.resolve("part-0000.csv"), "a|b|c\n1|2|3\n")
-    assert(CsvDialect.sniffSeparator(dir.toString) == "|")
+    assert(sniffFile(dir.toString) == "|")
     // an empty directory falls back
     val empty = java.nio.file.Files.createTempDirectory("dialectempty")
-    assert(CsvDialect.sniffSeparator(empty.toString) == ",")
+    assert(sniffFile(empty.toString) == ",")
   }
 }
