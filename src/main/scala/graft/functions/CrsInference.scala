@@ -13,10 +13,10 @@ import scala.util.Try
   * centroid extraction over a `LIMIT 10` sample, then guesses the CRS from
   * the min/max coordinate ranges. Here the sample is at most [[SampleSize]]
   * non-null raw values per column, read by the caller on the driver from
-  * the head of the source (GeoParquet.headValues for parquet), and the
-  * chain runs over them with the scalar JTS kernels — no DataFrame, no
-  * job. Driver traffic stays bounded by a constant regardless of table
-  * size.
+  * the head of the source (`GeoParquet.Planned.headValues` for parquet),
+  * and the chain runs over them with the scalar JTS kernels — no
+  * DataFrame, no job. Driver traffic stays bounded by a constant
+  * regardless of table size.
   */
 object CrsInference {
 

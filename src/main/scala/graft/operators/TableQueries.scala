@@ -905,8 +905,9 @@ object TableQueries {
     // SQL MERGE — table_merge_cow's exact oracle replayed through
     // `MERGE INTO … WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
     // INSERT *`: the rule maps the canonical upsert shape onto
-    // TxLog.merge (zone-map candidate pruning, key semi-join, minority
-    // rewrite) and refuses shapes it cannot prove equivalent.
+    // TxLog.merge (zone-map candidate pruning, key semi-join, one
+    // classification write over the affected files) and refuses shapes it
+    // cannot prove equivalent.
     QuerySpec(
       "table_merge_sql",
       (s, dir) => {
@@ -951,10 +952,10 @@ object TableQueries {
     // General MERGE clause algebra in SQL — the shapes Delta users type
     // daily and the canonical-upsert rule refuses: a CONDITIONAL
     // matched DELETE, a second matched clause (first satisfied wins),
-    // and INSERT * — routed to the single-materialization kernel
-    // (TxLog.mergeGeneral): conditions and assignments evaluate exactly
-    // once into a committed classification; rewrite and CDF images both
-    // re-read those bytes. Oracle restates the clause algebra as a CASE.
+    // and INSERT * — routed to TxLog.mergeGeneral: conditions and
+    // assignments evaluate once per row, in the one write whose rows are
+    // both the new data files and the CDF images. Oracle restates the
+    // clause algebra as a CASE.
     QuerySpec(
       "table_merge_delete_sql",
       (s, dir) => {

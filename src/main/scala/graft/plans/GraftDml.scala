@@ -38,14 +38,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * MERGE: ON must be the single same-named equi-key (refused loudly
   * otherwise). The canonical upsert — `UPDATE SET *` / `INSERT *`, no
-  * conditions, no BY SOURCE — takes the zero-extra-write fast path
-  * (TxLog.merge). Every other clause algebra — conditional matched
-  * UPDATE/DELETE, multiple first-wins WHEN clauses, partial-column
-  * INSERT, WHEN NOT MATCHED BY SOURCE — routes to
-  * [[TxLog.mergeGeneral]]'s single-materialization kernel once the
-  * analyzer has resolved the clause expressions (exprIds decide which
-  * side each reference binds to: source attributes re-bind as
-  * `__src_<name>`, target attributes as bare names).
+  * conditions, no BY SOURCE — routes to TxLog.merge, which commits a
+  * source matching no live row as a plain append. Every other clause
+  * algebra — conditional matched UPDATE/DELETE, multiple first-wins WHEN
+  * clauses, partial-column INSERT, WHEN NOT MATCHED BY SOURCE — routes to
+  * [[TxLog.mergeGeneral]] once the analyzer has resolved the clause
+  * expressions (exprIds decide which side each reference binds to:
+  * source attributes re-bind as `__src_<name>`, target attributes as bare
+  * names). Both run TxLog's one copy-on-write kernel.
   */
 object GraftDml extends Rule[LogicalPlan] {
 
@@ -130,7 +130,7 @@ object GraftDml extends Rule[LogicalPlan] {
           if (isStarUpdate(matched, target, source) &&
               isStarInsert(notMatched, target, source) &&
               notMatchedBySource.isEmpty)
-            // canonical upsert: the zero-extra-write fast path
+            // canonical upsert: TxLog.merge
             GraftMergeCommand(t, source, keyCol, target.output.map(_.name))
           else if ((matched ++ notMatched ++ notMatchedBySource).forall(actionReady))
             generalMerge(t, target, source, keyCol,
@@ -381,7 +381,7 @@ final case class GraftInsertCommand(
 /** The general MERGE shapes — conditional matched UPDATE/DELETE,
   * multiple first-wins WHEN clauses, partial-column INSERT, WHEN NOT
   * MATCHED BY SOURCE — as an eager command over
-  * [[TxLog.mergeGeneral]]'s single-materialization kernel. Expressions
+  * [[TxLog.mergeGeneral]]. Expressions
   * arrive de-resolved into the kernel's two-name namespace (target
   * columns bare, source columns `__src_<name>`). */
 final case class GraftMergeGeneralCommand(

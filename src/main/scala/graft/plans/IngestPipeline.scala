@@ -27,8 +27,8 @@ final case class IngestJob(
   * Catalyst plan until the sink action: at 100 TB that is the difference
   * between two full materializations and zero. Planning reads bounded
   * prefixes on the driver — the CSV dialect + type sample (≤ 20,480
-  * lines, CsvDialect), one parquet footer (GeoParquet.readParquet), the
-  * ≤10-value CRS probe sample (GeoParquet.headValues), container headers
+  * lines, CsvDialect), one parquet footer (GeoParquet.plan), the
+  * ≤10-value CRS probe sample (its `headValues`), container headers
   * — so a CSV or parquet ingest runs exactly one Spark job: the sink
   * write.
   */
@@ -62,12 +62,16 @@ object IngestPipeline {
     val fileType = FileTypeDetector.detect(job.filePath)
       .fold(e => throw new IllegalArgumentException(e), identity)
     val tableName = FileTypeDetector.cleanTableName(job.tableName)
-    val df = read(spark, job.filePath, fileType)
+    // a parquet source's planning state (conf, listing, footer) also
+    // serves the CRS probe
+    val parquet = Option.when(fileType == FileType.Parquet)(
+      graft.sources.GeoParquet.plan(spark, job.filePath))
+    val df = parquet.fold(read(spark, job.filePath, fileType))(_.df)
     val geometry = SchemaHeuristics.findGeometryColumns(df.schema, fileType)
     if (geometry.names.isEmpty)
       Result(fileType, tableName, geometry, None, df) // NonGeoStrategy: identity
     else {
-      val crs = currentCrs(df, fileType, geometry, job.filePath)
+      val crs = currentCrs(df, fileType, geometry, job.filePath, parquet)
       // fail FAST on a CRS our closed-form math can't reproject (e.g. a
       // gpkg declaring EPSG:25832): proceeding would Try-swallow the
       // per-row transform error into NULL for 100% of geometries — silent
@@ -166,12 +170,14 @@ object IngestPipeline {
     }
   }
 
-  /** `get_crs_number` (geo_strategy.rs:21-72): per-format CRS source. */
+  /** `get_crs_number` (geo_strategy.rs:21-72): per-format CRS source.
+    * `parquet` is the planned read of a parquet source. */
   def currentCrs(
       df: DataFrame,
       fileType: FileType,
       geometry: SchemaHeuristics.GeometryColumns,
-      sourcePath: String): String = fileType match {
+      sourcePath: String,
+      parquet: Option[graft.sources.GeoParquet.Planned] = None): String = fileType match {
     case FileType.Shapefile =>
       prjCrs(sourcePath).getOrElse("4326")
     case FileType.Parquet =>
@@ -183,10 +189,12 @@ object IngestPipeline {
         .find(f => f.metadata.contains(graft.sources.GeoParquet.CrsTag))
         .map(_.metadata.getString(graft.sources.GeoParquet.CrsTag)
           .stripPrefix("EPSG:"))
-        .getOrElse(CrsInference.inferCrs(
-          geometry.names.map(g => g -> df.schema(g).dataType),
-          graft.sources.GeoParquet.headValues(df.sparkSession, sourcePath, _,
-            CrsInference.SampleSize)))
+        .getOrElse {
+          require(parquet.nonEmpty, s"$sourcePath: the CRS probe needs the planned parquet read")
+          CrsInference.inferCrs(
+            geometry.names.map(g => g -> df.schema(g).dataType),
+            parquet.get.headValues(_, CrsInference.SampleSize))
+        }
     case FileType.Csv | FileType.Excel | FileType.Arrow =>
       "4326" // geo_strategy.rs:48-54 — hard default for tabular sources
               // (Arrow carries no CRS metadata — same tabular stance)

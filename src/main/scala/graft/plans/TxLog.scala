@@ -676,115 +676,26 @@ object TxLog {
       }).get
   }
 
-  /** File-granular copy-on-write MERGE (upsert `updates` by `keyCol`):
-    * candidate files are pruned by the updates' key RANGE against the
-    * log's zone maps, the exact affected set comes from a key semi-join
-    * over just the candidates' key column, and only affected files are
-    * rewritten (untouched files carry over by name). Update keys matching
-    * no live row insert. Aborts with ConcurrentModificationException if a
-    * racing commit removed an affected file first.
+  /** Upsert `updates` by `keyCol`: a row whose key a live row holds
+    * replaces that row, every other row inserts. It is [[mergeGeneral]]
+    * with one unconditional WHEN MATCHED UPDATE SET * clause and one WHEN
+    * NOT MATCHED INSERT * clause, so it shares that kernel's reads, its
+    * refusals (duplicate non-NULL keys, a non-deterministic `updates`)
+    * and its conflict rules. `updates` must have the table's schema.
+    * When no live file holds any of its keys, the merge commits as a
+    * plain append.
     *
     * At 100 TB this is the point of the log: a merge touching 0.1% of
     * keys rewrites 0.1% of files, provable from the commit's remove set. */
-  /** NOTE: `updates` is evaluated in several actions (duplicate check,
-    * key-range probe, the rewrite, the CDF images) — it must be a
-    * deterministic frame; materialize (cache/write) anything derived
-    * from rand()/shuffles first. This predates the CDF and is the same
-    * contract every multi-action consumer of a DataFrame has. */
-  def merge(spark: SparkSession, table: String, updates: DataFrame, keyCol: String,
-      writeCdf: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit}
+  def merge(spark: SparkSession, table: String, updates: DataFrame, keyCol: String): Long = {
     val snap = replay(table, None)
     requireSchemaMatch(snap.schemaJson, nullable(updates.schema).json, table)
-    // duplicate update keys make "upsert" ambiguous (both rows would
-    // land) — refuse loudly, like every MERGE implementation must
-    val dup = updates.groupBy(col(keyCol))
-      .count().filter(col("count") > 1).limit(3)
-      .collect().map(_.get(0))
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"merge updates carry duplicate $keyCol values (${dup.mkString(", ")}…): " +
-          "resolve to one row per key before merging")
-    val range = updates.agg(
-      org.apache.spark.sql.functions.min(col(keyCol)).cast("string"),
-      org.apache.spark.sql.functions.max(col(keyCol)).cast("string")).head()
-    if (range.isNullAt(0)) return snap.version // empty updates: no-op
-    val cand = pruneFiles(snap, keyCol, range.getString(0), range.getString(1))
-    val affected: Seq[String] =
-      if (cand.isEmpty) Seq.empty
-      else {
-        val candKeys = readFiles(spark, table, snap.copy(files = cand))
-          .select(col(keyCol), input_file_name().as("__file"))
-        candKeys.join(updates.select(col(keyCol)).distinct(), keyCol)
-          .select("__file").distinct()
-          .collect().map(r => relativizeUri(table, r.getString(0))).toSeq.sorted
-      }
-    if (affected.isEmpty) return append(updates, table)
-    val affectedRows = readFiles(spark, table, snap.copy(files = affected))
-    val merged = affectedRows
-      .join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .unionByName(updates.select(affectedRows.columns.map(col).toSeq: _*))
-      .repartition(math.max(1, affected.length))
-    val (files, _, stats) = writeData(merged, table, snap.partitionCols)
-    val (rLo, rHi) = (range.getString(0), range.getString(1))
-    // exact upsert images for the CDF: keys present in the affected
-    // files are updates (pre from the target, post from `updates`);
-    // keys absent are inserts. writeCdf=false skips the three bounded
-    // key-joins + image write for write-heavy merges whose feed nobody
-    // reads (the feed then derives this commit as a coarse diff).
-    val cdf = if (!writeCdf) Nil else {
-      val affKeys = affectedRows.select(col(keyCol)).distinct()
-      val updAligned = updates.select(affectedRows.columns.map(col).toSeq: _*)
-      val cdfRows = affectedRows
-        .join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_semi")
-        .select(affectedRows.columns.map(col).toSeq: _*)
-        .withColumn(ChangeTypeCol, lit("update_preimage"))
-        .unionByName(updAligned.join(affKeys, Seq(keyCol), "left_semi")
-          .select(affectedRows.columns.map(col).toSeq: _*)
-          .withColumn(ChangeTypeCol, lit("update_postimage")))
-        .unionByName(updAligned.join(affKeys, Seq(keyCol), "left_anti")
-          .select(affectedRows.columns.map(col).toSeq: _*)
-          .withColumn(ChangeTypeCol, lit("insert")))
-      writeChangeData(cdfRows, table, affected.length)
-    }
-    commit(table, "merge", files, dataChange = true, schemaPlan = _ => snap.schemaJson,
-      stats = stats, partitionCols = snap.partitionCols, cdf = cdf,
-      newRowCheck = constraintGate(spark, table, files, snap.schemaJson,
-        snap.partitionCols, "merge"),
-      removePlan = { now =>
-        val gone = affected.filterNot(now.files.contains)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"merge on $table@${snap.version} lost the race: affected files " +
-              s"already removed by a newer commit: ${gone.take(3).mkString(", ")}")
-        // ConcurrentAppendException semantics: a racing commit that ADDED
-        // files whose key zone maps intersect the updates' key range may
-        // have landed the same keys after this merge's snapshot read —
-        // committing anyway would leave duplicate keys, breaking the
-        // uniqueness invariant merge enforces on its own input. Files
-        // without key stats can't prove disjointness and conflict
-        // conservatively; our own freshly written files are exempt.
-        val planned = snap.files.toSet
-        val mine = files.toSet
-        val racedAdds = now.files.filterNot(f => planned(f) || mine(f))
-        val overlapping = racedAdds.filter { f =>
-          now.stats.get(f).flatMap(_.get(keyCol)) match {
-            case Some(cs) =>
-              !(statLt(cs.kind, rHi, cs.min) || statLt(cs.kind, cs.max, rLo))
-            case None => true
-          }
-        }
-        if (overlapping.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"merge on $table@${snap.version} conflicts with a concurrent " +
-              s"append intersecting its key range [$rLo, $rHi]: " +
-              overlapping.take(3).mkString(", "))
-        affected
-      }).get
+    val all = updates.columns.toSeq.map(c => c -> org.apache.spark.sql.functions.col(s"__src_$c"))
+    mergeClauses(spark, table, snap, updates, keyCol, Seq((None, Some(all))), Seq((None, all)),
+      notMatchedBySource = Nil, appendIfNoneMatch = true)
   }
 
-  /** General copy-on-write MERGE — the full SQL clause algebra the
-    * canonical upsert ([[merge]]) refuses:
+  /** General copy-on-write MERGE — the full SQL clause algebra:
     *
     *  - `matched`: WHEN MATCHED [AND cond] THEN UPDATE SET … (`Some(sets)`,
     *    unassigned columns carry the target value) or DELETE (`None`),
@@ -802,28 +713,40 @@ object TxLog {
     * (refused loudly otherwise — a target row matching two source rows
     * is the SQL cardinality violation).
     *
-    * SINGLE-MATERIALIZATION contract: clause conditions and assignment
-    * expressions evaluate EXACTLY ONCE, into a committed classification
-    * (action label + per-column post-values); the table rewrite and the
-    * CDF images both re-read those bytes, so feed and table cannot
-    * diverge even for per-action expressions. The `source` frame itself
-    * is read in more than one action (key probe + join) and must be
-    * deterministic — refused loudly otherwise.
+    * One classification: clause conditions and assignments evaluate once
+    * per row, inside the single write of [[copyOnWrite]], whose rows are
+    * both the table's new files and the change feed's images — so feed
+    * and table cannot diverge, even for per-action expressions. The
+    * `source` is read by three actions (one aggregate for the key range
+    * and the duplicate check, the affected-file probe, the write) and
+    * must be deterministic — refused loudly otherwise.
     *
     * Scale shape: without `notMatchedBySource` only files containing
-    * source keys rewrite (zone-map prune + semi-join, like [[merge]]);
-    * with it every target row must be examined, so the whole live set is
-    * the affected set — the same cost Delta pays for that clause. */
+    * source keys rewrite (zone-map prune + semi-join); with it every
+    * target row must be examined, so the whole live set is the affected
+    * set — the same cost Delta pays for that clause. */
   def mergeGeneral(
       spark: SparkSession, table: String,
       source: DataFrame, keyCol: String,
       matched: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])],
       notMatched: Seq[(Option[org.apache.spark.sql.Column], Seq[(String, org.apache.spark.sql.Column)])],
-      notMatchedBySource: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])] = Nil,
-      writeCdf: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
+      notMatchedBySource: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])] = Nil)
+      : Long =
+    mergeClauses(spark, table, replay(table, None), source, keyCol, matched, notMatched,
+      notMatchedBySource, appendIfNoneMatch = false)
+
+  /** [[mergeGeneral]]'s body. `appendIfNoneMatch` ([[merge]]'s upsert
+    * shape only, where every unmatched row inserts unchanged) commits a
+    * source that matches no live row as a plain append of `source`. */
+  private def mergeClauses(
+      spark: SparkSession, table: String, snap: Snapshot,
+      source: DataFrame, keyCol: String,
+      matched: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])],
+      notMatched: Seq[(Option[org.apache.spark.sql.Column], Seq[(String, org.apache.spark.sql.Column)])],
+      notMatchedBySource: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])],
+      appendIfNoneMatch: Boolean): Long = {
+    import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, max, min, sum, when}
     import org.apache.spark.sql.Column
-    val snap = replay(table, None)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
       s"merge key $keyCol is not a column of $table")
@@ -852,11 +775,11 @@ object TxLog {
         s"MERGE on $table assigns column(s) twice in one clause: " +
           dupSet.mkString(", "))
     }
-    // the source is read by several actions (dup probe, key join, the
-    // classification write) — nondeterminism would desynchronize them.
-    // Per-EXECUTION-resolved time expressions report deterministic=true
-    // yet re-resolve per action (the hazard delete() closes for its own
-    // condition), so refuse those by shape too.
+    // the source is read by several actions (key probe, affected-file
+    // probe, the classification write) — nondeterminism would
+    // desynchronize them. Per-EXECUTION-resolved time expressions report
+    // deterministic=true yet re-resolve per action, so refuse those by
+    // shape too.
     val timeResolved = Set(
       "current_timestamp", "current_date", "now", "localtimestamp",
       "current_timezone", "curdate", "current_time", "localtime")
@@ -870,30 +793,28 @@ object TxLog {
         "key probe from the classification); materialize it to a table first")
     val srcKey = s"__src_$keyCol"
     val src = source.select(source.columns.map(c => col(c).as(s"__src_$c")).toSeq: _*)
-    // SQL MERGE key semantics: a NULL key never equi-matches, so NULL-key
-    // source rows are legitimate NOT MATCHED inserts — exclude them from
-    // the cardinality probe (two NULL keys cannot double-match a target
-    // row) and from the key range
-    val dup = src.filter(col(srcKey).isNotNull)
-      .groupBy(col(srcKey)).count().filter(col("count") > 1).limit(3)
-      .collect().map(_.get(0))
-    if (dup.nonEmpty)
+    // One aggregate over the source: the key range, the row count and the
+    // largest per-key count. SQL MERGE key semantics: a NULL key never
+    // equi-matches, so NULL-key rows are legitimate NOT MATCHED inserts —
+    // they count as rows (an all-NULL-key source is not empty) but not
+    // toward the range or the cardinality check (two NULL keys cannot
+    // double-match a target row).
+    val perKey = src.groupBy(col(srcKey)).agg(count(lit(1)).as("n"))
+    val probe = perKey.agg(
+      min(col(srcKey)).cast("string"), max(col(srcKey)).cast("string"),
+      coalesce(sum(col("n")), lit(0L)),
+      coalesce(max(when(col(srcKey).isNotNull, col("n"))), lit(0L))).head()
+    if (probe.getLong(3) > 1) {
+      val dup = perKey.filter(col(srcKey).isNotNull && col("n") > 1).limit(3)
+        .collect().map(_.get(0))
       throw new IllegalArgumentException(
         s"merge source carries duplicate $keyCol values (${dup.mkString(", ")}…): " +
           "a target row matching two source rows is the MERGE cardinality violation")
-    val range = src.agg(
-      org.apache.spark.sql.functions.min(col(srcKey)).cast("string"),
-      org.apache.spark.sql.functions.max(col(srcKey)).cast("string"),
-      org.apache.spark.sql.functions.count(lit(1))).head()
-    // min/max skip NULLs: an all-NULL-key source is NOT empty — its rows
-    // are legitimate NOT MATCHED inserts (a NULL key never equi-matches)
-    val srcRows = range.getLong(2)
+    }
     val keyRange: Option[(String, String)] =
-      if (range.isNullAt(0)) None
-      else Some((range.getString(0), range.getString(1)))
+      if (probe.isNullAt(0)) None else Some((probe.getString(0), probe.getString(1)))
     val wholesale = notMatchedBySource.nonEmpty
-    if (srcRows == 0 && !wholesale) return snap.version // nothing can fire
-    val (rLo, rHi) = keyRange.getOrElse(("", ""))
+    if (probe.getLong(2) == 0 && !wholesale) return snap.version // nothing can fire
     val affected: Seq[String] =
       if (wholesale) snap.files
       else keyRange match {
@@ -901,12 +822,12 @@ object TxLog {
         case Some((lo, hi)) =>
           val cand = pruneFiles(snap, keyCol, lo, hi)
           if (cand.isEmpty) Seq.empty
-          else readFiles(spark, table, snap.copy(files = cand))
-            .select(col(keyCol), input_file_name().as("__file"))
-            .join(src.select(col(srcKey).as(keyCol)).distinct(), keyCol)
-            .select("__file").distinct()
-            .collect().map(r => relativizeUri(table, r.getString(0))).toSeq.sorted
+          else affectedFiles(table, readFiles(spark, table, snap.copy(files = cand))
+            .withColumn(FileCol, input_file_name())
+            .join(src.select(col(srcKey).as(keyCol)), Seq(keyCol), "left_semi"))
       }
+    if (affected.isEmpty && appendIfNoneMatch) return append(source, table)
+    if (affected.isEmpty && notMatched.isEmpty) return snap.version
     // ---- action algebra -------------------------------------------
     // labels: m<i> matched clause i, i<j> not-matched clause j, s<k>
     // not-matched-by-source clause k, keep = carry target row, drop =
@@ -922,22 +843,23 @@ object TxLog {
       when(tgtHere && srcHere, firstMatch(matched.map(_._1), "m", "keep"))
         .when(srcHere, firstMatch(notMatched.map(_._1), "i", "drop"))
         .otherwise(firstMatch(notMatchedBySource.map(_._1), "s", "keep"))
-    val updateLabels =
-      matched.zipWithIndex.collect { case ((_, Some(_)), i) => s"m$i" } ++
-        notMatchedBySource.zipWithIndex.collect { case ((_, Some(_)), k) => s"s$k" }
-    val deleteLabels =
-      matched.zipWithIndex.collect { case ((_, None), i) => s"m$i" } ++
-        notMatchedBySource.zipWithIndex.collect { case ((_, None), k) => s"s$k" }
-    val insertLabels = notMatched.indices.map(j => s"i$j")
+    // each label's kind for the kernel; "drop" has none, so it writes nothing
+    val kinds: Seq[(String, String)] = Seq("keep" -> "keep") ++
+      matched.zipWithIndex.map { case ((_, s), i) => s"m$i" -> s.fold("delete")(_ => "update") } ++
+      notMatched.indices.map(j => s"i$j" -> "insert") ++
+      notMatchedBySource.zipWithIndex.map { case ((_, s), k) =>
+        s"s$k" -> s.fold("delete")(_ => "update") }
+    val kind = kinds.tail.foldLeft(when(col("__action") === kinds.head._1, kinds.head._2)) {
+      case (acc, (label, k)) => acc.when(col("__action") === label, k)
+    }
     def assigned(sets: Seq[(String, Column)],
         f: org.apache.spark.sql.types.StructField, default: Column): Column =
       sets.find(_._1.equalsIgnoreCase(f.name)).map(_._2).getOrElse(default)
         .cast(f.dataType)
     def postExpr(f: org.apache.spark.sql.types.StructField): Column = {
       val arms: Seq[(String, Column)] =
-        Seq("keep" -> col(f.name)) ++
-          matched.zipWithIndex.collect { case ((_, Some(sets)), i) =>
-            s"m$i" -> assigned(sets, f, col(f.name)) } ++
+        matched.zipWithIndex.collect { case ((_, Some(sets)), i) =>
+          s"m$i" -> assigned(sets, f, col(f.name)) } ++
           notMatched.zipWithIndex.map { case ((_, values), j) =>
             s"i$j" -> assigned(values, f, lit(null)) } ++
           notMatchedBySource.zipWithIndex.collect { case ((_, Some(sets)), k) =>
@@ -945,95 +867,46 @@ object TxLog {
       arms.foldLeft(None: Option[Column]) { case (acc, (label, v)) =>
         val arm = col("__action") === label
         Some(acc.fold(when(arm, v))(_.when(arm, v)))
-      }.get.otherwise(lit(null)).cast(f.dataType)
+      }.getOrElse(lit(null)).cast(f.dataType)
     }
+    // the affected files' scan keeps its partitioning (one task per input
+    // file) and the source joins onto it — broadcast when it fits — so
+    // no target row is shuffled. The source marker must NOT be of the
+    // __src_<name> shape a renamed source column could occupy (a source
+    // column literally named "present" renames to __src_present).
     val tgt = readFiles(spark, table, snap.copy(files = affected))
-      .withColumn("__tgt_present", lit(true))
-    // the source marker must NOT be of the __src_<name> shape a renamed
-    // source column could occupy (a source column literally named
-    // "present" renames to __src_present) — __graft_src_present cannot
-    // collide with any rename
-    val joined = tgt.join(src.withColumn("__graft_src_present", lit(true)),
-      col(keyCol) === col(srcKey), "full_outer")
-      .withColumn("__action", actionCol)
-    val classifiedCols =
-      schema.fields.map(f => col(f.name)).toSeq ++
-        Seq(col("__action")) ++
-        schema.fields.map(f => postExpr(f).as(s"__post_${f.name}")).toSeq
-    val parallelism = math.max(1, math.max(affected.length, src.rdd.getNumPartitions))
-    val tmp = writeChangeData(joined.select(classifiedCols: _*), table, parallelism)
-    val temp = spark.read.parquet(tmp.map(f => Paths.get(table, f).toString): _*)
-    val changedLabels = updateLabels ++ deleteLabels ++ insertLabels
-    if (temp.filter(col("__action").isInCollection(changedLabels)).isEmpty)
-      return snap.version // every clause missed: no-op, temp ages out
-    val outLabels = Seq("keep") ++ updateLabels ++ insertLabels
-    val outRows = temp.filter(col("__action").isInCollection(outLabels))
-      .select(schema.fields.map(f =>
-        col(s"__post_${f.name}").as(f.name)).toIndexedSeq: _*)
-    // The survivor write and the CDF image write both derive from the
-    // committed classification bytes and are independent of each other —
-    // run them as concurrent driver-submitted jobs (the second job's
-    // tasks back-fill executors the first job's tail frees) instead of
-    // serializing two write-job latencies per merge.
-    val cdfFut: java.util.concurrent.Future[Seq[String]] =
-      if (!writeCdf) java.util.concurrent.CompletableFuture.completedFuture(Nil)
-      else submitConcurrently {
-        def img(labels: Seq[String], post: Boolean, tpe: String): Option[DataFrame] =
-          if (labels.isEmpty) None
-          else Some(temp.filter(col("__action").isInCollection(labels))
-            .select(schema.fields.map(f =>
-              (if (post) col(s"__post_${f.name}") else col(f.name)).as(f.name))
-              .toIndexedSeq: _*)
-            .withColumn(ChangeTypeCol, lit(tpe)))
-        val images =
-          img(updateLabels, post = false, "update_preimage").toSeq ++
-            img(updateLabels, post = true, "update_postimage") ++
-            img(deleteLabels, post = false, "delete") ++
-            img(insertLabels, post = true, "insert")
-        writeChangeData(images.reduce(_ unionByName _), table, parallelism)
-      }
-    val (files0, _, stats0) =
-      try writeData(outRows.repartition(parallelism), table, snap.partitionCols)
-      catch { case t: Throwable => cdfFut.cancel(true); throw t }
-    val written = files0.map(f =>
-      stats0.get(f).flatMap(_.get(RowCountKey)).map(_.min.toLong).getOrElse(0L)).sum
-    val (files, stats) =
-      if (written == 0) (Seq.empty[String], Map.empty[String, Map[String, ColStats]])
-      else (files0, stats0)
-    // exact images from the SAME committed classification bytes
-    val cdf = awaitConcurrent(cdfFut)
-    commit(table, "merge", files, dataChange = true,
-      schemaPlan = _ => snap.schemaJson, stats = stats,
-      partitionCols = snap.partitionCols, cdf = cdf,
-      newRowCheck = constraintGate(spark, table, files, snap.schemaJson,
-        snap.partitionCols, "merge"),
-      removePlan = { now =>
-        val gone = affected.filterNot(now.files.contains)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"merge on $table@${snap.version} lost the race: affected files " +
-              s"already removed by a newer commit: ${gone.take(3).mkString(", ")}")
-        val planned = snap.files.toSet
-        val mine = files.toSet
-        val racedAdds = now.files.filterNot(f => planned(f) || mine(f))
-        val overlapping =
-          if (wholesale) racedAdds // every target row was examined: any
-          // concurrent add holds rows this merge never saw — conflict
-          else if (keyRange.isEmpty) Seq.empty // NULL-only keys: matched
-          // clauses can never fire, so keyed appends commute
-          else racedAdds.filter { f =>
+    val srcSide = src.withColumn("__graft_src_present", lit(true))
+    val matchedSide = tgt.withColumn("__tgt_present", lit(true))
+      .join(srcSide, col(keyCol) === col(srcKey), "left_outer")
+    // NOT MATCHED rows are the source rows whose key no affected row
+    // holds: the affected set is every file holding a source key, so no
+    // live row holds theirs either
+    val rows =
+      if (notMatched.isEmpty) matchedSide
+      else matchedSide.unionByName(
+        srcSide.join(tgt.select(col(keyCol)), col(srcKey) === col(keyCol), "left_anti")
+          .select(schema.fields.map(f => lit(null).cast(f.dataType).as(f.name)).toSeq ++
+            Seq(lit(null).cast("boolean").as("__tgt_present")) ++
+            srcSide.columns.map(col).toSeq: _*))
+    copyOnWrite(spark, table, snap, "merge", affected,
+      rows.withColumn("__action", actionCol), kind, postExpr,
+      conflicts = { (now, racedAdds) =>
+        // ConcurrentAppendException semantics: a racing commit that ADDED
+        // files whose key zone maps intersect the source's key range may
+        // have landed the same keys after this merge's snapshot read.
+        // Files without key stats can't prove disjointness and conflict
+        // conservatively.
+        if (wholesale) racedAdds // every target row was examined
+        // NULL-only keys: matched clauses cannot fire, keyed appends commute
+        else keyRange.fold(Seq.empty[String]) { case (lo, hi) =>
+          racedAdds.filter { f =>
             now.stats.get(f).flatMap(_.get(keyCol)) match {
-              case Some(cs) =>
-                !(statLt(cs.kind, rHi, cs.min) || statLt(cs.kind, cs.max, rLo))
+              case Some(cs) => !(statLt(cs.kind, hi, cs.min) || statLt(cs.kind, cs.max, lo))
               case None => true
             }
           }
-        if (overlapping.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"merge on $table@${snap.version} conflicts with concurrent " +
-              s"append(s): ${overlapping.take(3).mkString(", ")}")
-        affected
-      }).get
+        }
+      })
   }
 
   /** File-granular copy-on-write DELETE: rows where `condition` is TRUE
@@ -1045,100 +918,26 @@ object TxLog {
     * removed an affected file first. The erasure primitive (GDPR-style
     * per-key removal) a governed 100 TB corpus must support.
     *
-    * With CDF on, the condition is evaluated ONCE into a committed
-    * classification (delete vs carry) and both the survivor rewrite and
-    * the delete images derive from those bytes — update()'s read-back
-    * contract — so the feed can never diverge from the table even for
-    * per-action expressions like current_timestamp(). */
+    * The condition classifies each affected row once, in [[copyOnWrite]]'s
+    * single write: the survivors become the new data files and the
+    * deleted rows the feed's delete images, so a per-action expression
+    * like current_timestamp() cannot classify differently for the table
+    * and the feed. The affected-file scan may drift from that
+    * classification: a detected file matching nothing is rewritten
+    * verbatim, and a missed file keeps its rows in table and feed alike. */
   def delete(
       spark: SparkSession, table: String,
-      condition: org.apache.spark.sql.Column,
-      writeCdf: Boolean = true): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit}
+      condition: org.apache.spark.sql.Column): Long = {
+    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
     val snap = replay(table, None)
-    val full = readFiles(spark, table, snap)
-    requireDeterministic(
-      full.filter(coalesce(condition, lit(false))), "DELETE condition")
     val cond = coalesce(condition, lit(false))
-    val affected = full.filter(cond)
-      .select(input_file_name().as("__file")).distinct()
-      .collect().map(r => relativizeUri(table, r.getString(0))).toSeq.sorted
+    val matching = readFiles(spark, table, snap).filter(cond)
+    requireDeterministic(matching, "DELETE condition")
+    val affected = affectedFiles(table, matching.withColumn(FileCol, input_file_name()))
     if (affected.isEmpty) return snap.version
-    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    // SINGLE-EVALUATION, SINGLE-PASS contract: `condition` runs exactly
-    // once more after affected-file detection — in ONE classification
-    // write that partitions the affected rows by their fate. The
-    // carry-class files then BECOME the survivor data files by rename
-    // (their bytes ARE the classification — zero re-write, zero
-    // re-evaluation), and the CDF delete images derive from the
-    // delete-class files. Write volume is affected-rows once plus
-    // deleted-rows once — the same as a naive two-scan delete — with
-    // none of its divergence hazard: a time-resolved predicate
-    // (current_timestamp() reports deterministic=true yet re-resolves
-    // per action) cannot classify differently for the table and the
-    // feed, because there is only one classification. The affected-file
-    // detection scan is allowed to drift: a file detected but matching
-    // nothing at classification time is rewritten verbatim (churn, not
-    // error), and a file missed entirely keeps its rows in table AND
-    // feed alike.
-    val classCol = "__graft_class"
-    val commitId = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val stage = Paths.get(table, "data", commitId)
-    val classParts = classCol +: snap.partitionCols
-    // no shuffle: each affected file's rows are classified and written by
-    // the task that read them, so its survivors land in one file that
-    // keeps the input's key range
-    val stageDf = readFiles(spark, table, snap.copy(files = affected))
-      .withColumn(classCol,
-        org.apache.spark.sql.functions.when(cond, "delete").otherwise("carry"))
-    val staged = DirectParquet.write(stageDf, stage.toString, classParts)
-    // carry files move up one level: data/<cid>/<class>=carry/<segs>/f
-    // → data/<cid>/<segs>/f — the survivor files, named into the layout
-    // every reader expects, bytes untouched, with the in-task zone maps
-    // of the stage write
-    val carryPrefix = s"$classCol=carry/"
-    val moved = staged.collect { case (rel, st) if rel.startsWith(carryPrefix) =>
-      val dstRel = rel.stripPrefix(carryPrefix)
-      val dst = stage.resolve(dstRel)
-      Files.createDirectories(dst.getParent)
-      Files.move(stage.resolve(rel), dst)
-      val full = s"data/$commitId/$dstRel"
-      full -> (st ++ partitionStats(full, schema, snap.partitionCols))
-    }
-    val files0 = moved.map(_._1)
-    val stats0 = moved.toMap
-    val written = files0.map(f =>
-      stats0.get(f).flatMap(_.get(RowCountKey)).map(_.min.toLong).getOrElse(0L)).sum
-    val (files, stats) =
-      if (written == 0) (Seq.empty[String], Map.empty[String, Map[String, ColStats]])
-      else (files0, stats0)
-    // exact delete images from the classified bytes (never a fresh
-    // condition scan); partition values re-attach from the class-dir
-    // paths and materialize as ordinary columns, volume ∝ deleted rows.
-    // writeCdf=false skips the image write — the delete-class files are
-    // unreferenced either way and age out through vacuum's data sweep.
-    val deleteDir = stage.resolve(s"$classCol=delete")
-    val cdf =
-      if (!writeCdf || !staged.exists(_._1.startsWith(s"$classCol=delete/"))) Nil
-      else {
-        val delDf = spark.read.option("basePath", deleteDir.toString)
-          .parquet(deleteDir.toString)
-          .select(schema.fields.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-          .withColumn(ChangeTypeCol, lit("delete"))
-        writeChangeData(delDf, table, affected.length)
-      }
-    commit(table, "delete", files, dataChange = true,
-      schemaPlan = _ => snap.schemaJson, stats = stats,
-      partitionCols = snap.partitionCols, cdf = cdf,
-      removePlan = { now =>
-        val gone = affected.filterNot(now.files.contains)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"delete on $table@${snap.version} lost the race: affected files " +
-              s"already removed by a newer commit: ${gone.take(3).mkString(", ")}")
-        affected
-      }).get
+    copyOnWrite(spark, table, snap, "delete", affected,
+      readFiles(spark, table, snap.copy(files = affected)),
+      when(cond, "delete").otherwise("keep"), f => org.apache.spark.sql.functions.col(f.name))
   }
 
   /** File-granular copy-on-write UPDATE: rows where `condition` is TRUE
@@ -1147,13 +946,15 @@ object TxLog {
     * condition keeps the row untouched, SQL UPDATE semantics. Only files
     * CONTAINING matching rows are rewritten, found the same way delete
     * finds them; non-matching rows in those files carry over verbatim.
-    * Aborts with ConcurrentModificationException if a racing commit
-    * removed an affected file first. */
+    * The SET expressions run once per updated row, in [[copyOnWrite]]'s
+    * single write, so each post-image in the feed is the row the table
+    * holds. Aborts with ConcurrentModificationException if a racing
+    * commit removed an affected file first. */
   def update(
       spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
     val snap = replay(table, None)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     val unknown = sets.map(_._1).filterNot(n =>
@@ -1161,56 +962,138 @@ object TxLog {
     if (unknown.nonEmpty)
       throw new IllegalArgumentException(
         s"UPDATE on $table assigns unknown column(s): ${unknown.mkString(", ")}")
-    val full = readFiles(spark, table, snap)
     val cond = coalesce(condition, lit(false))
-    requireDeterministic(full.filter(cond), "UPDATE condition")
-    val affected = full.filter(cond)
-      .select(input_file_name().as("__file")).distinct()
-      .collect().map(r => relativizeUri(table, r.getString(0))).toSeq.sorted
+    val matching = readFiles(spark, table, snap).filter(cond)
+    requireDeterministic(matching, "UPDATE condition")
+    val affected = affectedFiles(table, matching.withColumn(FileCol, input_file_name()))
     if (affected.isEmpty) return snap.version
-    val applySets: DataFrame => DataFrame = df => df.select(schema.fields.map { f =>
-      sets.find(_._1.equalsIgnoreCase(f.name)) match {
-        case Some((_, v)) => v.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }.toSeq: _*)
-    // SINGLE-EVALUATION contract: the SET expressions run exactly once —
-    // in the CDF image write — and the table rewrite re-reads the
-    // committed postimage BYTES, so the feed can never diverge from the
-    // table even for expressions the determinism check cannot see
-    // (current_timestamp() re-resolves per action). The condition must
-    // be deterministic: it classifies rows in two separate scans.
-    val changed = readFiles(spark, table, snap.copy(files = affected)).filter(cond)
-    val pre = changed.withColumn(ChangeTypeCol, lit("update_preimage"))
-    val post = applySets(changed).withColumn(ChangeTypeCol, lit("update_postimage"))
-    val cdf = writeChangeData(pre.unionByName(post), table, affected.length)
-    val committedPost = spark.read
-      .schema(StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField(ChangeTypeCol,
-          org.apache.spark.sql.types.StringType)))
-      .parquet(cdf.map(f => Paths.get(table, f).toString): _*)
-      .filter(col(ChangeTypeCol) === "update_postimage")
-      .drop(ChangeTypeCol)
-    val rewritten = readFiles(spark, table, snap.copy(files = affected))
-      .filter(!cond)
-      .unionByName(committedPost)
-    val (files, _, stats) =
-      writeData(rewritten.repartition(math.max(1, affected.length)), table,
-        snap.partitionCols)
-    commit(table, "update", files, dataChange = true,
-      schemaPlan = _ => snap.schemaJson, stats = stats,
-      partitionCols = snap.partitionCols, cdf = cdf,
+    copyOnWrite(spark, table, snap, "update", affected,
+      readFiles(spark, table, snap.copy(files = affected)),
+      when(cond, "update").otherwise("keep"),
+      f => sets.find(_._1.equalsIgnoreCase(f.name)).fold(col(f.name))(_._2))
+  }
+
+  /** The table-relative names of the files the rows of `matched` were
+    * read from, which `matched` carries in [[FileCol]]: `input_file_name()`
+    * over the [[readFiles]] scan, taken after any filter (so it still
+    * pushes down) and before any join (a join with another file source
+    * leaves the function ambiguous). Each task sends its distinct names
+    * and the driver merges them: one job, no shuffle. */
+  private def affectedFiles(table: String, matched: DataFrame): Seq[String] = {
+    val str = org.apache.spark.sql.Encoders.STRING
+    matched.select(FileCol).as(str)
+      .mapPartitions(names => names.toSet.iterator)(str)
+      .collect().toSet.map((uri: String) => relativizeUri(table, uri)).toSeq.sorted
+  }
+
+  private val FileCol = "__graft_file"
+
+  /** The path segment value of the kernel's data class — the carried,
+    * updated and inserted rows that become the commit's data files. */
+  private val DataClass = "data"
+
+  /** The one copy-on-write kernel of [[merge]], [[mergeGeneral]],
+    * [[update]] and [[delete]]. `rows` are the affected files' rows (and,
+    * for a merge, the source rows to insert) with the table's columns as
+    * their pre-image; `kind` labels each row `keep`, `update`, `delete` or
+    * `insert` (NULL drops it), and `post` gives each column's post-image,
+    * evaluated for updated and inserted rows only.
+    *
+    * One `DirectParquet.write` into `_change_data/<cid>/`, partitioned by
+    * `_change_type` and the table's partition columns, puts each row into
+    * every class it belongs to: a kept row into the data class, an update's
+    * post-image into the data class and `update_postimage` and its
+    * pre-image into `update_preimage`, an insert into the data class and
+    * `insert`, a deleted row into `delete`. The data-class directory then
+    * moves to `data/<cid>/` and its files, with the zone maps the write
+    * tasks computed, are the commit's new data files; the directory that
+    * is left holds only the change-feed images and is the commit's `cdf`
+    * entry. Nothing is shuffled unless `rows` is, so each input file's
+    * kept and updated rows land in one output file that keeps its key
+    * range. A write that changes no row commits nothing.
+    *
+    * `conflicts` names the files among a racing commit's adds that this
+    * commit must not ignore (see [[merge]]); any such file, or an
+    * affected file a racing commit already removed, aborts the commit
+    * with a ConcurrentModificationException. */
+  private def copyOnWrite(
+      spark: SparkSession, table: String, snap: Snapshot, op: String,
+      affected: Seq[String], rows: DataFrame,
+      kind: org.apache.spark.sql.Column,
+      post: org.apache.spark.sql.types.StructField => org.apache.spark.sql.Column,
+      conflicts: (Snapshot, Seq[String]) => Seq[String] = (_, _) => Nil): Long = {
+    import org.apache.spark.sql.functions.{array, col, explode, lit, when}
+    val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+    val k = col("__graft_kind")
+    def classes(cs: String*) = array(cs.map(lit): _*)
+    val exploded = rows.withColumn("__graft_kind", kind).select(
+      schema.fieldNames.map(col).toSeq ++
+        schema.fields.zipWithIndex.map { case (f, i) =>
+          when(k.isin("update", "insert"), post(f).cast(f.dataType)).as(s"__graft_post_$i") } ++
+        Seq(k, explode(
+          when(k === "keep", classes(DataClass))
+            .when(k === "update", classes(DataClass, "update_postimage", "update_preimage"))
+            .when(k === "insert", classes(DataClass, "insert"))
+            .when(k === "delete", classes("delete"))).as(ChangeTypeCol)): _*)
+    val usePost = k.isin("update", "insert") && col(ChangeTypeCol) =!= "update_preimage"
+    val out = exploded.select(schema.fields.zipWithIndex.map { case (f, i) =>
+      when(usePost, col(s"__graft_post_$i")).otherwise(col(f.name)).as(f.name)
+    }.toSeq :+ col(ChangeTypeCol): _*)
+    val cid = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+    val stage = Paths.get(table, ChangeDataDirName, cid)
+    val written = DirectParquet.write(out, stage.toString, ChangeTypeCol +: snap.partitionCols)
+    val dataPrefix = s"$ChangeTypeCol=$DataClass/"
+    val (data, images) = written.partition(_._1.startsWith(dataPrefix))
+    if (images.isEmpty) { // no row changed: nothing to commit
+      deleteTree(stage)
+      return snap.version
+    }
+    if (data.nonEmpty) {
+      Files.createDirectories(Paths.get(table, "data"))
+      Files.move(stage.resolve(s"$ChangeTypeCol=$DataClass"), Paths.get(table, "data", cid))
+    }
+    val stats = data.map { case (rel, st) =>
+      val f = s"data/$cid/${rel.stripPrefix(dataPrefix)}"
+      f -> (st ++ partitionStats(f, schema, snap.partitionCols))
+    }
+    val files = stats.map(_._1)
+    commit(table, op, files, dataChange = true,
+      schemaPlan = _ => snap.schemaJson, stats = stats.toMap,
+      partitionCols = snap.partitionCols, cdf = Seq(s"$ChangeDataDirName/$cid"),
       newRowCheck = constraintGate(spark, table, files, snap.schemaJson,
-        snap.partitionCols, "UPDATE"),
+        snap.partitionCols, op),
       removePlan = { now =>
         val gone = affected.filterNot(now.files.contains)
         if (gone.nonEmpty)
           throw new java.util.ConcurrentModificationException(
-            s"update on $table@${snap.version} lost the race: affected files " +
+            s"$op on $table@${snap.version} lost the race: affected files " +
               s"already removed by a newer commit: ${gone.take(3).mkString(", ")}")
+        val planned = snap.files.toSet ++ files
+        val raced = conflicts(now, now.files.filterNot(planned))
+        if (raced.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"$op on $table@${snap.version} conflicts with concurrent " +
+              s"append(s): ${raced.take(3).mkString(", ")}")
         affected
       }).get
   }
+
+  /** Table-relative paths of the parquet files under `dir`, sorted. */
+  private def parquetFilesUnder(table: String, dir: Path): Seq[String] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+      .map(relativize(table, _)).toSeq.sorted
+    finally s.close()
+  }
+
+  /** Delete `dir` and everything under it, if it exists. */
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.toSeq.reverse.foreach(p => Files.delete(p))
+      finally s.close()
+    }
 
   /** METADATA-ONLY rollback: make the table's head state equal version
     * `toVersion` again, as a NEW commit (history is append-only — the
@@ -1404,7 +1287,9 @@ object TxLog {
     *  - delete/update/merge commits read the exact pre/post images their
     *    COW kernel persisted under `_change_data/` at commit time, so an
     *    update that rewrote a 1M-row file but touched 10 rows feeds 20
-    *    CDF rows, never the million;
+    *    CDF rows, never the million. [[copyOnWrite]]'s images carry the
+    *    change type as a `_change_type=<type>/` path segment; image
+    *    files of older commits carry it as a column, and read as before;
     *  - overwrite/restore (and legacy COW commits from logs written
     *    before CDF existed) derive delete rows from their removed files
     *    and insert rows from their net-new added files — exact as a
@@ -1462,15 +1347,24 @@ object TxLog {
           c.add.foreach(f => dataUnit(c.schemaJson, c.partitionCols,
             FileUnit(f, c.version, c.ts * 1000L, "insert")))
         case _ if c.cdf.nonEmpty =>
-          // exact pre/post images persisted by the COW kernel; partition
-          // values were materialized as ordinary columns at write time
-          val vacuumed = c.cdf.filterNot(f => Files.exists(Paths.get(table, f)))
+          // exact pre/post images persisted by the COW kernel. A directory
+          // entry is the kernel's `_change_data/<cid>`: change type and
+          // partition values live in its files' paths, which read like
+          // data files. A file entry is an older commit's image file,
+          // with `_change_type` and the partition values as columns.
+          val (dirs, oldFiles) = c.cdf.partition(f => Files.isDirectory(Paths.get(table, f)))
+          val images = dirs.map(d => d -> parquetFilesUnder(table, Paths.get(table, d)))
+          val vacuumed = oldFiles.filterNot(f => Files.exists(Paths.get(table, f))) ++
+            images.collect { case (d, fs) if fs.isEmpty => d }
           if (vacuumed.nonEmpty) throw new IllegalStateException(
             s"change feed for $table version ${c.version}: ${vacuumed.length} " +
               s"change file(s) vacuumed (${vacuumed.take(3).mkString(", ")}) — " +
               "this range is no longer readable; resume past it or widen the " +
               "vacuum retention")
-          c.cdf.foreach(f => cdfUnits.getOrElseUpdate(c.schemaJson,
+          images.flatMap(_._2).foreach(f => dataUnit(c.schemaJson, c.partitionCols,
+            FileUnit(f, c.version, c.ts * 1000L,
+              partitionValuesOf(f, Seq(ChangeTypeCol))(ChangeTypeCol))))
+          oldFiles.foreach(f => cdfUnits.getOrElseUpdate(c.schemaJson,
             scala.collection.mutable.ArrayBuffer.empty) +=
             FileUnit(f, c.version, c.ts * 1000L, ""))
         case _ =>
@@ -1599,10 +1493,10 @@ object TxLog {
     else parts.reduce(_ union _) // positionally aligned; flattens to one Union
   }
 
-  /** A COW kernel's condition classifies rows in MORE than one scan
-    * (affected-file detection, survivor filter, CDF image filter) — a
-    * non-deterministic predicate would classify differently per scan and
-    * silently corrupt both the rewrite and the feed. Refuse loudly.
+  /** A COW kernel's condition classifies rows in two scans (affected-file
+    * detection, then the classification write) — a non-deterministic
+    * predicate would classify differently per scan and silently skip or
+    * churn files. Refuse loudly.
     * The check runs on the ANALYZED filter (an unresolved function node
     * reports deterministic=true vacuously), so `df` must be a frame
     * already filtered by the condition under test. */
@@ -1617,19 +1511,6 @@ object TxLog {
         "inconsistently); materialize the predicate into a column first")
   }
 
-  /** Daemon pool for overlapping independent write jobs of one commit
-    * (guide: concurrent driver-submitted jobs back-fill the tail of the
-    * running job). Bounded by usage — one in-flight write per commit. */
-  private lazy val writePool = java.util.concurrent.Executors.newCachedThreadPool(
-    (r: Runnable) => {
-      val t = new Thread(r, "graft-write-overlap"); t.setDaemon(true); t
-    })
-
-  private def submitConcurrently[A](body: => A): java.util.concurrent.Future[A] =
-    writePool.submit(new java.util.concurrent.Callable[A] {
-      def call(): A = body
-    })
-
   /** `Future.get` with the cause unwrapped, so commit callers see the
     * same exception type the inline code path would throw. */
   private def awaitConcurrent[A](f: java.util.concurrent.Future[A]): A =
@@ -1638,17 +1519,6 @@ object TxLog {
       case e: java.util.concurrent.ExecutionException =>
         throw Option(e.getCause).getOrElse(e)
     }
-
-  /** Persist a COW kernel's change rows (schema + `_change_type`) under
-    * `_change_data/` — never part of the live file set, invisible to
-    * vacuum's `data/` walk, read back only by [[changeFeed]]. */
-  private def writeChangeData(
-      df: DataFrame, table: String, parallelism: Int): Seq[String] = {
-    val id = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val dir = Paths.get(table, ChangeDataDirName, id)
-    DirectParquet.write(df.repartition(math.max(1, parallelism)), dir.toString)
-      .map { case (name, _) => s"$ChangeDataDirName/$id/$name" }
-  }
 
   /** The newest version committed AT OR BEFORE `tsMillis` — Delta's
     * timestampAsOf semantics, resolved by binary search over the log's

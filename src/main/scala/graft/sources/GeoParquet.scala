@@ -9,6 +9,7 @@ import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer => ParquetFooter, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -96,28 +97,6 @@ object GeoParquet {
     } finally writer.close()
   }
 
-  /** The Spark schema and `geo` key of the footer Spark's non-merging
-    * schema inference would read for `path` (`_common_metadata`, else
-    * `_metadata`, else the first data file in path order), opened once on
-    * the driver with the session's Hadoop conf
-    * (`ParquetFileFormat.readSchemaFromFooter`, with the converter Spark's
-    * inference builds from the session's SQLConf). */
-  private def footer(s: SparkSession, path: String): (StructType, Option[String]) = {
-    val conf = s.sessionState.newHadoopConf()
-    val leaves = listLeaves(conf, path)
-    val file = leaves.find(_.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
-      .orElse(leaves.find(_.getName == ParquetFileWriter.PARQUET_METADATA_FILE))
-      .orElse(leaves.find(!isSummary(_)))
-      .getOrElse(throw new IllegalArgumentException(s"no parquet file under '$path'"))
-    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
-      HadoopReadOptions.builder(conf, file)
-        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-    val meta = try rd.getFooter finally rd.close()
-    val schema = ParquetFileFormat.readSchemaFromFooter(new ParquetFooter(file, meta),
-      new ParquetToSparkSchemaConverter(s.sessionState.conf))
-    (schema, Option(meta.getFileMetaData.getKeyValueMetaData.get("geo")))
-  }
-
   /** Files under `path` as Spark's file index lists them, sorted by path:
     * names starting `_` or `.` are hidden (partition directories `_k=v`
     * and the two summary files excepted). */
@@ -139,48 +118,6 @@ object GeoParquet {
     p.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE ||
       p.getName == ParquetFileWriter.PARQUET_METADATA_FILE
 
-  /** Up to `n` non-null values of the top-level column `column`, read on
-    * the driver from the head of the data file(s) under `path` in path
-    * order, row group by row group: the bounded sample a
-    * `filter(isNotNull).limit(n)` would return, without a job. Values are
-    * the stored bytes (a string column's UTF-8). Files whose `column` is
-    * absent or not BINARY contribute nothing. */
-  def headValues(s: SparkSession, path: String, column: String, n: Int): Seq[Array[Byte]] = {
-    val conf = s.sessionState.newHadoopConf()
-    val out = mutable.ArrayBuffer.empty[Array[Byte]]
-    val files = listLeaves(conf, path).filterNot(isSummary).iterator
-    while (out.size < n && files.hasNext) {
-      val rd = ParquetFileReader.open(HadoopInputFile.fromPath(files.next(), conf))
-      try {
-        val fileMeta = rd.getFooter.getFileMetaData
-        val schema = fileMeta.getSchema
-        val field = Option.when(schema.containsField(column))(
-          schema.getType(schema.getFieldIndex(column)))
-        if (field.exists(f => f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName ==
-            PrimitiveType.PrimitiveTypeName.BINARY)) {
-          val projection = new MessageType(schema.getName, field.get)
-          val desc = projection.getColumns.get(0)
-          rd.setRequestedSchema(projection)
-          var rowGroup = rd.readNextRowGroup()
-          while (rowGroup != null) {
-            val values = new ColumnReadStoreImpl(rowGroup,
-              new GroupRecordConverter(projection).getRootConverter, projection,
-              fileMeta.getCreatedBy).getColumnReader(desc)
-            var i = 0L
-            while (i < rowGroup.getRowCount && out.size < n) {
-              if (values.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel)
-                out += values.getBinary.getBytes
-              values.consume()
-              i += 1
-            }
-            rowGroup = if (out.size < n) rd.readNextRowGroup() else null
-          }
-        }
-      } finally rd.close()
-    }
-    out.toSeq
-  }
-
   /** The primary column name and CRS a `geo` footer value declares. */
   private def parseGeo(path: String, geo: String): (String, String) = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -201,22 +138,95 @@ object GeoParquet {
     (primary, crs)
   }
 
-  /** Read parquet at `path`, plain or GeoParquet, from one driver footer
-    * open and no job: Spark's parquet scan with the footer's schema; a
-    * GeoParquet footer's primary geometry column is tagged (GeometryTag +
-    * CrsTag). */
-  def readParquet(s: SparkSession, path: String): DataFrame = {
-    val (schema, geoKey) = footer(s, path)
-    val df = s.read.schema(schema).parquet(path)
-    geoKey.fold(df) { geo =>
+  /** A parquet path planned on the driver with no job: the session's
+    * Hadoop conf copied once, the files Spark's file index would list
+    * (listed once), and the footer Spark's non-merging schema inference
+    * would read (`_common_metadata`, else `_metadata`, else the first data
+    * file in path order), opened once. `df` is Spark's parquet scan with
+    * that footer's schema (`ParquetFileFormat.readSchemaFromFooter`, with
+    * the converter Spark's inference builds from the session's SQLConf);
+    * a GeoParquet footer's primary geometry column is tagged (GeometryTag
+    * + CrsTag). */
+  final class Planned private[GeoParquet] (
+      val df: DataFrame, conf: Configuration, dataFiles: Seq[Path],
+      footerFile: Path, footer: ParquetMetadata) {
+
+    /** Up to `n` non-null values of the top-level column `column`, read
+      * from the head of the data file(s) in path order, row group by row
+      * group: the bounded sample a `filter(isNotNull).limit(n)` would
+      * return, without a job. The footer already read is not read again.
+      * Values are the stored bytes (a string column's UTF-8). Files whose
+      * `column` is absent or not BINARY contribute nothing. */
+    def headValues(column: String, n: Int): Seq[Array[Byte]] = {
+      val out = mutable.ArrayBuffer.empty[Array[Byte]]
+      val files = dataFiles.iterator
+      while (out.size < n && files.hasNext) {
+        val f = files.next()
+        val rd =
+          if (f == footerFile) ParquetFileReader.open(conf, f, footer)
+          else ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try {
+          val fileMeta = rd.getFooter.getFileMetaData
+          val schema = fileMeta.getSchema
+          val field = Option.when(schema.containsField(column))(
+            schema.getType(schema.getFieldIndex(column)))
+          if (field.exists(f => f.isPrimitive && f.asPrimitiveType.getPrimitiveTypeName ==
+              PrimitiveType.PrimitiveTypeName.BINARY)) {
+            val projection = new MessageType(schema.getName, field.get)
+            val desc = projection.getColumns.get(0)
+            rd.setRequestedSchema(projection)
+            var rowGroup = rd.readNextRowGroup()
+            while (rowGroup != null) {
+              val values = new ColumnReadStoreImpl(rowGroup,
+                new GroupRecordConverter(projection).getRootConverter, projection,
+                fileMeta.getCreatedBy).getColumnReader(desc)
+              var i = 0L
+              while (i < rowGroup.getRowCount && out.size < n) {
+                if (values.getCurrentDefinitionLevel == desc.getMaxDefinitionLevel)
+                  out += values.getBinary.getBytes
+                values.consume()
+                i += 1
+              }
+              rowGroup = if (out.size < n) rd.readNextRowGroup() else null
+            }
+          }
+        } finally rd.close()
+      }
+      out.toSeq
+    }
+  }
+
+  /** Plan the parquet read at `path`, plain or GeoParquet; see [[Planned]]. */
+  def plan(s: SparkSession, path: String): Planned = {
+    val conf = s.sessionState.newHadoopConf()
+    val leaves = listLeaves(conf, path)
+    val file = leaves.find(_.getName == ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+      .orElse(leaves.find(_.getName == ParquetFileWriter.PARQUET_METADATA_FILE))
+      .orElse(leaves.find(!isSummary(_)))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet file under '$path'"))
+    // a summary file's row groups (every file's, for `_metadata`) are
+    // not needed; a data file's are what headValues reads
+    val rd = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+      HadoopReadOptions.builder(conf, file)
+        .withMetadataFilter(if (isSummary(file)) ParquetMetadataConverter.SKIP_ROW_GROUPS
+          else ParquetMetadataConverter.NO_FILTER).build())
+    val meta = try rd.getFooter finally rd.close()
+    val schema = ParquetFileFormat.readSchemaFromFooter(new ParquetFooter(file, meta),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    val scan = s.read.schema(schema).parquet(path)
+    val df = Option(meta.getFileMetaData.getKeyValueMetaData.get("geo")).fold(scan) { geo =>
       val (primary, crs) = parseGeo(path, geo)
-      require(df.schema.fieldNames.contains(primary),
+      require(scan.schema.fieldNames.contains(primary),
         s"$path: primary_column '$primary' absent from parquet schema")
-      df.withMetadata(primary, new MetadataBuilder()
+      scan.withMetadata(primary, new MetadataBuilder()
         .putBoolean(SchemaHeuristics.GeometryTag, true)
         .putString(CrsTag, crs).build())
     }
+    new Planned(df, conf, leaves.filterNot(isSummary), file, meta)
   }
+
+  /** Read parquet at `path`, plain or GeoParquet (see [[Planned]]). */
+  def readParquet(s: SparkSession, path: String): DataFrame = plan(s, path).df
 
   /** Read a GeoParquet file; plain parquet fails loudly. */
   def read(s: SparkSession, path: String): DataFrame = {

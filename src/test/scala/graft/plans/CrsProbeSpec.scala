@@ -54,7 +54,7 @@ class CrsProbeSpec extends AnyFunSuite {
     }
     val file = writeOneFile(rows, BinaryType, rowGroupRows = 100)
     assert(rowGroups(file) >= 2)
-    val sample = GeoParquet.headValues(spark, file, "geom", CrsInference.SampleSize)
+    val sample = GeoParquet.plan(spark, file).headValues("geom", CrsInference.SampleSize)
     assert(sample.length == CrsInference.SampleSize)
     assert(plannedCrs(file).contains("3857"))
   }
@@ -79,7 +79,7 @@ class CrsProbeSpec extends AnyFunSuite {
   test("geoms_wkb.parquet resolves through the WKB arm") {
     val file = writeOneFile(Seq(Row(1L, wkb(-0.5, 51.0)), Row(2L, wkb(0.5, 52.0)), Row(3L, null)),
       BinaryType)
-    val sample = GeoParquet.headValues(spark, file, "geom", CrsInference.SampleSize)
+    val sample = GeoParquet.plan(spark, file).headValues("geom", CrsInference.SampleSize)
     assert(sample.length == 2)
     assert(CrsInference.analyseGeometryColumn(BinaryType, sample).contains("4326"))
   }
@@ -88,16 +88,16 @@ class CrsProbeSpec extends AnyFunSuite {
     // WKT: the hex-WKB arm parses nothing, the WKT arm answers
     val wkt = writeOneFile(Seq(Row(1L, "POINT (1 2)"), Row(2L, "POINT (oops)"), Row(3L, null)),
       StringType)
-    val wktSample = GeoParquet.headValues(spark, wkt, "geom", CrsInference.SampleSize)
+    val wktSample = GeoParquet.plan(spark, wkt).headValues("geom", CrsInference.SampleSize)
     assert(wktSample.map(new String(_, "UTF-8")) == Seq("POINT (1 2)", "POINT (oops)"))
     assert(CrsInference.analyseGeometryColumn(StringType, wktSample).contains("4326"))
     // hex-WKB text in British National Grid metres: the hex arm answers
     val hex = org.locationtech.jts.io.WKBWriter.toHex(wkb(538890.0, 177320.0))
     val hexFile = writeOneFile(Seq(Row(1L, hex)), StringType)
     assert(CrsInference.analyseGeometryColumn(StringType,
-      GeoParquet.headValues(spark, hexFile, "geom", CrsInference.SampleSize)).contains("27700"))
+      GeoParquet.plan(spark, hexFile).headValues("geom", CrsInference.SampleSize)).contains("27700"))
     // and an absent or non-binary column samples nothing
-    assert(GeoParquet.headValues(spark, hexFile, "id", 10).isEmpty)
-    assert(GeoParquet.headValues(spark, hexFile, "nope", 10).isEmpty)
+    assert(GeoParquet.plan(spark, hexFile).headValues("id", 10).isEmpty)
+    assert(GeoParquet.plan(spark, hexFile).headValues("nope", 10).isEmpty)
   }
 }
