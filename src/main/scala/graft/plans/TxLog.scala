@@ -1,8 +1,15 @@
 package graft.plans
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import graft.sources.GraftFileIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths}
 import scala.jdk.CollectionConverters._
@@ -446,18 +453,12 @@ object TxLog {
         throw new IllegalArgumentException(
           s"PARTITION column $k is not a partition column of $table " +
             s"(partitioned by ${snap.partitionCols.mkString(", ")})"))
-      val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-      val typed = org.apache.spark.sql.catalyst.expressions.Cast(
-        org.apache.spark.sql.catalyst.expressions.Literal(
-          org.apache.spark.unsafe.types.UTF8String.fromString(v),
-          org.apache.spark.sql.types.StringType),
-        tableSchema(name).dataType, timeZoneId = Some(tz)).eval(null)
+      val typed = partitionValue(v, tableSchema(name).dataType)
       require(typed != null,
         s"PARTITION ($k='$v') does not parse as ${tableSchema(name).dataType.sql}")
-      val canon = org.apache.spark.sql.catalyst.expressions.Cast(
-        org.apache.spark.sql.catalyst.expressions.Literal(typed,
-          tableSchema(name).dataType),
-        org.apache.spark.sql.types.StringType, timeZoneId = Some(tz)).eval(null).toString
+      val canon = Cast(Literal(typed, tableSchema(name).dataType),
+        org.apache.spark.sql.types.StringType,
+        timeZoneId = Some(SQLConf.get.sessionLocalTimeZone)).eval(null).toString
       name -> canon
     }
   }
@@ -745,7 +746,7 @@ object TxLog {
       notMatched: Seq[(Option[org.apache.spark.sql.Column], Seq[(String, org.apache.spark.sql.Column)])],
       notMatchedBySource: Seq[(Option[org.apache.spark.sql.Column], Option[Seq[(String, org.apache.spark.sql.Column)]])],
       appendIfNoneMatch: Boolean): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, max, min, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum, when}
     import org.apache.spark.sql.Column
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     require(schema.fieldNames.exists(_.equalsIgnoreCase(keyCol)),
@@ -822,9 +823,9 @@ object TxLog {
         case Some((lo, hi)) =>
           val cand = pruneFiles(snap, keyCol, lo, hi)
           if (cand.isEmpty) Seq.empty
-          else affectedFiles(table, readFiles(spark, table, snap.copy(files = cand))
-            .withColumn(FileCol, input_file_name())
-            .join(src.select(col(srcKey).as(keyCol)), Seq(keyCol), "left_semi"))
+          else affectedFiles(
+            readWithFile(spark, table, snap.copy(files = cand))
+              .join(src.select(col(srcKey).as(keyCol)), Seq(keyCol), "left_semi"))
       }
     if (affected.isEmpty && appendIfNoneMatch) return append(source, table)
     if (affected.isEmpty && notMatched.isEmpty) return snap.version
@@ -899,12 +900,7 @@ object TxLog {
         if (wholesale) racedAdds // every target row was examined
         // NULL-only keys: matched clauses cannot fire, keyed appends commute
         else keyRange.fold(Seq.empty[String]) { case (lo, hi) =>
-          racedAdds.filter { f =>
-            now.stats.get(f).flatMap(_.get(keyCol)) match {
-              case Some(cs) => !(statLt(cs.kind, hi, cs.min) || statLt(cs.kind, cs.max, lo))
-              case None => true
-            }
-          }
+          pruneFiles(now.copy(files = racedAdds), keyCol, lo, hi)
         }
       })
   }
@@ -912,7 +908,8 @@ object TxLog {
   /** File-granular copy-on-write DELETE: rows where `condition` is TRUE
     * are removed (NULL keeps the row, SQL DELETE semantics); only files
     * actually CONTAINING matching rows are rewritten, found by one
-    * column-pruned scan of the condition's inputs + input_file_name.
+    * column-pruned, zone-map-pruned scan of the condition's inputs and
+    * each row's file name.
     * Files whose every row matches are simply dropped (no empty rewrite).
     * Aborts with ConcurrentModificationException if a racing commit
     * removed an affected file first. The erasure primitive (GDPR-style
@@ -928,12 +925,12 @@ object TxLog {
   def delete(
       spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions.{coalesce, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, lit, when}
     val snap = replay(table, None)
     val cond = coalesce(condition, lit(false))
-    val matching = readFiles(spark, table, snap).filter(cond)
+    val matching = readWithFile(spark, table, snap).filter(cond)
     requireDeterministic(matching, "DELETE condition")
-    val affected = affectedFiles(table, matching.withColumn(FileCol, input_file_name()))
+    val affected = affectedFiles(matching)
     if (affected.isEmpty) return snap.version
     copyOnWrite(spark, table, snap, "delete", affected,
       readFiles(spark, table, snap.copy(files = affected)),
@@ -954,7 +951,7 @@ object TxLog {
       spark: SparkSession, table: String,
       condition: org.apache.spark.sql.Column,
       sets: Seq[(String, org.apache.spark.sql.Column)]): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val snap = replay(table, None)
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
     val unknown = sets.map(_._1).filterNot(n =>
@@ -963,9 +960,9 @@ object TxLog {
       throw new IllegalArgumentException(
         s"UPDATE on $table assigns unknown column(s): ${unknown.mkString(", ")}")
     val cond = coalesce(condition, lit(false))
-    val matching = readFiles(spark, table, snap).filter(cond)
+    val matching = readWithFile(spark, table, snap).filter(cond)
     requireDeterministic(matching, "UPDATE condition")
-    val affected = affectedFiles(table, matching.withColumn(FileCol, input_file_name()))
+    val affected = affectedFiles(matching)
     if (affected.isEmpty) return snap.version
     copyOnWrite(spark, table, snap, "update", affected,
       readFiles(spark, table, snap.copy(files = affected)),
@@ -974,16 +971,14 @@ object TxLog {
   }
 
   /** The table-relative names of the files the rows of `matched` were
-    * read from, which `matched` carries in [[FileCol]]: `input_file_name()`
-    * over the [[readFiles]] scan, taken after any filter (so it still
-    * pushes down) and before any join (a join with another file source
-    * leaves the function ambiguous). Each task sends its distinct names
-    * and the driver merges them: one job, no shuffle. */
-  private def affectedFiles(table: String, matched: DataFrame): Seq[String] = {
+    * read from, which `matched` carries in [[FileCol]] (a [[readWithFile]]
+    * scan, filtered or joined). Each task sends its distinct names and
+    * the driver merges them: one job, no shuffle. */
+  private def affectedFiles(matched: DataFrame): Seq[String] = {
     val str = org.apache.spark.sql.Encoders.STRING
     matched.select(FileCol).as(str)
       .mapPartitions(names => names.toSet.iterator)(str)
-      .collect().toSet.map((uri: String) => relativizeUri(table, uri)).toSeq.sorted
+      .collect().distinct.sorted.toSeq
   }
 
   private val FileCol = "__graft_file"
@@ -1307,15 +1302,16 @@ object TxLog {
     * the number of distinct schema shapes in the range, not by its
     * commit count: one O(range) driver walk (incremental live-set fold,
     * never a per-commit replay) attributes every contributing file to
-    * its (commit version, timestamp, change type), files sharing a
-    * schema read in ONE multi-file parquet scan, and the per-file
-    * attribution rides a broadcast join against that file→commit map
-    * (O(changed files) rows). A 10k-commit range plans like a handful
-    * of scans, not a 10k-branch union. */
+    * its (commit version, timestamp, change type), and files sharing a
+    * schema read in ONE scan through a [[GraftFileIndex]] that attaches
+    * those three values to each file's rows as partition values. A
+    * 10k-commit range plans like a handful of scans, not a 10k-branch
+    * union. */
   def changeFeed(
       spark: SparkSession, table: String,
       fromExclusive: Long, toInclusive: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, input_file_name, lit, raise_error, timestamp_micros, udf, when}
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
     val head = latestVersion(table)
     require(fromExclusive >= 0 && toInclusive <= head && fromExclusive <= toInclusive,
       s"change range ($fromExclusive, $toInclusive] invalid for $table at head $head")
@@ -1383,69 +1379,19 @@ object TxLog {
       prevPartCols = c.partitionCols
     }
     val metaFields = Seq(
-      org.apache.spark.sql.types.StructField(ChangeTypeCol,
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField(CommitVersionCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(CommitTimestampCol,
-        org.apache.spark.sql.types.TimestampType))
+      StructField(ChangeTypeCol, StringType),
+      StructField(CommitVersionCol, LongType, nullable = false),
+      StructField(CommitTimestampCol, TimestampType))
     val outSchema = StructType(finalSchema.fields ++ metaFields)
-    // ---- per-file attribution: scan once, broadcast-join the map -----
-    // input_file_name() yields a URI; normalize it back to the table-
-    // relative name the log speaks (pure string work — no filesystem
-    // state on executors). A failed attach raises, never drops a row.
-    val absTable = Paths.get(table).toAbsolutePath.normalize.toString
-    val relOf = udf((uri: String) => {
-      val p = uriToPath(uri)
-      if (p.startsWith(absTable + java.io.File.separator))
-        p.substring(absTable.length + 1)
-      else p
-    })
-    // partition values ride in the file→commit map too (parsed from the
-    // hive paths driver-side), so a partitioned group still reads in ONE
-    // plain multi-file scan — no per-commit basePath branches
-    def attach(scan: DataFrame, units: Seq[FileUnit],
-        partCols: Seq[String], schema: StructType): DataFrame = {
-      val metaSchema = StructType(
-        Seq(org.apache.spark.sql.types.StructField("__rel",
-          org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("__v",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("__tsus",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("__tpe",
-            org.apache.spark.sql.types.StringType)) ++
-          partCols.map(c => org.apache.spark.sql.types.StructField(s"__pv_$c",
-            org.apache.spark.sql.types.StringType, nullable = false)))
-      val rows = units.map { u =>
-        val pv = if (partCols.isEmpty) Map.empty[String, String]
-          else partitionValuesOf(u.file, partCols)
-        org.apache.spark.sql.Row.fromSeq(
-          Seq(u.file, u.version, u.tsUs, u.tpe) ++ partCols.map(pv))
-      }
-      val metaDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), metaSchema)
-      val joined = scan.withColumn("__rel", relOf(input_file_name()))
-        .join(broadcast(metaDf), Seq("__rel"), "left_outer")
-      val guardedV = when(col("__v").isNull,
-        raise_error(lit(s"graft changeFeed on $table: a scanned row's file " +
-          "did not attach to its commit — path normalization bug")))
-        .otherwise(col("__v"))
-      val withParts = partCols.foldLeft(joined) { (df, c) =>
-        df.withColumn(c, col(s"__pv_$c").cast(schema(c).dataType))
-      }
-      withParts
-        .withColumn(CommitVersionCol, guardedV.cast("long"))
-        .withColumn(CommitTimestampCol, timestamp_micros(col("__tsus")))
-    }
-    // a file can legitimately contribute TWICE (added, overwritten away,
-    // restored): parquet path lists dedupe, so occurrence layers split
-    // repeats into their own scans — layer 0 is all first occurrences
-    def layers(units: Seq[FileUnit]): Seq[Seq[FileUnit]] = {
-      val seen = scala.collection.mutable.Map.empty[String, Int]
-      units.groupBy { u =>
-        val n = seen.getOrElse(u.file, 0); seen(u.file) = n + 1; n
-      }.toSeq.sortBy(_._1).map(_._2)
+    // one scan per schema shape. Each unit's (type, version, timestamp)
+    // rides in the index as extra partition values of its file, so Spark
+    // attaches them to the file's rows; a file that contributes to
+    // several commits is read once per commit
+    def read(schemaJson: String, partCols: Seq[String], units: Seq[FileUnit],
+        meta: Seq[StructField], values: FileUnit => Seq[Any]): DataFrame = {
+      val byFile = units.groupBy(_.file)
+      readFiles(spark, table, Snapshot(toInclusive, units.map(_.file).distinct,
+        schemaJson, partitionCols = partCols), meta, rel => byFile(rel).map(values))
     }
     // align every branch to the FINAL schema: missing columns (added
     // later in the range) null-backfill, extra columns drop, retyped
@@ -1461,30 +1407,18 @@ object TxLog {
           case None => lit(null).cast(f.dataType).as(f.name)
         }
       }.toIndexedSeq: _*)
-    val dataParts: Seq[DataFrame] = dataUnits.toSeq.flatMap {
+    val dataParts: Seq[DataFrame] = dataUnits.toSeq.map {
       case ((schemaJson, partCols), units) =>
-        val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-        val dataSchema = StructType(
-          schema.fields.filterNot(f => partCols.contains(f.name)))
-        layers(units.toSeq).map { layer =>
-          requireLiveFilesExist(table,
-            Snapshot(toInclusive, layer.map(_.file), schemaJson))
-          val scan = spark.read.schema(dataSchema)
-            .parquet(layer.map(u => Paths.get(table, u.file).toString): _*)
-          aligned(attach(scan, layer, partCols, schema)
-            .withColumn(ChangeTypeCol, col("__tpe")), schema)
-        }
+        aligned(read(schemaJson, partCols, units.toSeq, metaFields,
+          u => Seq(UTF8String.fromString(u.tpe), u.version, u.tsUs)),
+          DataType.fromJson(schemaJson).asInstanceOf[StructType])
     }
-    val cdfParts: Seq[DataFrame] = cdfUnits.toSeq.flatMap { case (schemaJson, units) =>
+    // older commits' image files carry `_change_type` (and the partition
+    // values) as columns
+    val cdfParts: Seq[DataFrame] = cdfUnits.toSeq.map { case (schemaJson, units) =>
       val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val cdfSchema = StructType(schema.fields :+
-        org.apache.spark.sql.types.StructField(ChangeTypeCol,
-          org.apache.spark.sql.types.StringType))
-      layers(units.toSeq).map { layer =>
-        val scan = spark.read.schema(cdfSchema)
-          .parquet(layer.map(u => Paths.get(table, u.file).toString): _*)
-        aligned(attach(scan, layer, Nil, schema), schema)
-      }
+      aligned(read(StructType(schema.fields :+ metaFields.head).json, Nil, units.toSeq,
+        metaFields.tail, u => Seq(u.version, u.tsUs)), schema)
     }
     val parts = dataParts ++ cdfParts
     if (parts.isEmpty)
@@ -1510,15 +1444,6 @@ object TxLog {
         "one scan (rand()/shuffle-dependent expressions would classify rows " +
         "inconsistently); materialize the predicate into a column first")
   }
-
-  /** `Future.get` with the cause unwrapped, so commit callers see the
-    * same exception type the inline code path would throw. */
-  private def awaitConcurrent[A](f: java.util.concurrent.Future[A]): A =
-    try f.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        throw Option(e.getCause).getOrElse(e)
-    }
 
   /** The newest version committed AT OR BEFORE `tsMillis` — Delta's
     * timestampAsOf semantics, resolved by binary search over the log's
@@ -1872,7 +1797,11 @@ object TxLog {
         })
       }
       futures.map { case (rel, fut) =>
-        rel -> (awaitConcurrent(fut) ++ partitionStats(rel, schema, partitionBy))
+        // the cause unwrapped: a failed footer read throws its own error
+        val st = try fut.get() catch {
+          case e: java.util.concurrent.ExecutionException => throw Option(e.getCause).getOrElse(e)
+        }
+        rel -> (st ++ partitionStats(rel, schema, partitionBy))
       }.toMap
     } finally pool.shutdown()
   }
@@ -1919,6 +1848,22 @@ object TxLog {
     cols.map(c => c -> kvs.getOrElse(c,
       throw new IllegalStateException(
         s"file $rel lacks a partition segment for column $c"))).toMap
+  }
+
+  /** A partition value's string — a `col=value` path segment's or a
+    * PARTITION spec's — cast to the column's type, as catalyst's internal
+    * value. The session time zone makes the cast valid for every type
+    * (timestamps would otherwise throw); the write-time type restriction
+    * keeps the path round trip exact. */
+  private[graft] def partitionValue(v: String, dt: DataType): Any =
+    Cast(Literal(UTF8String.fromString(v), org.apache.spark.sql.types.StringType), dt,
+      timeZoneId = Some(SQLConf.get.sessionLocalTimeZone)).eval(null)
+
+  /** The typed values of `fields`, in order, from a file's `col=value/`
+    * path segments. */
+  private[graft] def typedPartitionValues(rel: String, fields: StructType): Seq[Any] = {
+    val pv = partitionValuesOf(rel, fields.fieldNames.toSeq)
+    fields.fields.toSeq.map(f => partitionValue(pv(f.name), f.dataType))
   }
 
   /** Undo Spark's hive-style %XX path escaping. Unescaped characters are
@@ -2073,36 +2018,37 @@ object TxLog {
   private def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
-  private def readFiles(spark: SparkSession, table: String, snap: Snapshot): DataFrame = {
+  /** `snap`'s files as one scan through a pinned [[GraftFileIndex]]: the
+    * table's columns in declared order, whose partition columns take the
+    * values of each file's `col=value/` path segments, then `extra`'s
+    * columns, whose values `extraValues` gives per file — one row of them
+    * for each time the file is to be read. A file gone from storage fails
+    * here, not at the first action. */
+  private def readFiles(
+      spark: SparkSession, table: String, snap: Snapshot,
+      extra: Seq[StructField] = Nil,
+      extraValues: String => Seq[Seq[Any]] = _ => Seq(Nil)): DataFrame = {
     val schema = DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
-    if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      requireLiveFilesExist(table, snap)
-      if (snap.partitionCols.isEmpty)
-        spark.read.schema(schema)
-          .parquet(snap.files.map(f => Paths.get(table, f).toString): _*)
-      else {
-        // hive layout: partition values live in the paths, so each
-        // commit's files read with that commit's dir as basePath and
-        // Spark's own partition discovery re-attaches the columns
-        // (typed by the explicit schema); per-commit grouping keeps the
-        // basePath a clean ancestor. The connector read path
-        // (format("graft")) serves the same rows from ONE scan via its
-        // partition-aware FileIndex — this API path is the bounded
-        // union over contributing commits.
-        import org.apache.spark.sql.functions.col
-        snap.files.groupBy(_.split("/")(1)).toSeq.sortBy(_._1)
-          .map { case (commitId, files) =>
-            spark.read
-              .option("basePath", Paths.get(table, "data", commitId).toString)
-              .schema(schema)
-              .parquet(files.map(f => Paths.get(table, f).toString): _*)
-              .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-          }.reduce(_ unionByName _)
-      }
-    }
+    val parts = StructType(snap.partitionCols.map(c => schema(c)))
+    val partSchema = StructType(parts ++ extra)
+    val index = new GraftFileIndex(table, snap, pinned = true, partSchema, { rel =>
+      val pv = typedPartitionValues(rel, parts)
+      extraValues(rel).map(pv ++ _)
+    })
+    index.refresh()
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      StructType(schema.fields.filterNot(f => snap.partitionCols.contains(f.name))),
+      None, new ParquetFileFormat(), Map.empty)(spark))
+      .select((schema.fieldNames ++ extra.map(_.name)).toIndexedSeq
+        .map(org.apache.spark.sql.functions.col): _*)
   }
+
+  /** [[readFiles]] plus [[FileCol]], each row's table-relative file name:
+    * the copy-on-write probes' scan. */
+  private def readWithFile(spark: SparkSession, table: String, snap: Snapshot): DataFrame =
+    readFiles(spark, table, snap,
+      Seq(StructField(FileCol, org.apache.spark.sql.types.StringType, nullable = false)),
+      rel => Seq(Seq(UTF8String.fromString(rel))))
 
   // ------------------------------------------------------------------
   // log replay
@@ -2277,29 +2223,12 @@ object TxLog {
       val remArr = rec.putArray("remove"); remove.foreach(remArr.add)
       rec.put("schema", schemaPlan(snap))
       rec.put("dataChange", dataChange)
-      if (effPartitionCols.nonEmpty) {
-        val pArr = rec.putArray("partitionCols"); effPartitionCols.foreach(pArr.add)
-      }
+      putTableState(rec, stats, props, effPartitionCols)
       if (cdf.nonEmpty) {
         val cArr = rec.putArray("cdf"); cdf.foreach(cArr.add)
       }
-      if (props.nonEmpty) {
-        val pNode = rec.putObject("props")
-        props.foreach { case (k, v) => pNode.put(k, v) }
-      }
       if (propsUnset.nonEmpty) {
         val uArr = rec.putArray("propsUnset"); propsUnset.foreach(uArr.add)
-      }
-      if (stats.nonEmpty) {
-        val stNode = rec.putObject("stats")
-        stats.foreach { case (f, cols) =>
-          val fNode = stNode.putObject(f)
-          cols.foreach { case (c, cs) =>
-            val cNode = fNode.putObject(c)
-            cNode.put("k", cs.kind); cNode.put("mn", cs.min); cNode.put("mx", cs.max)
-            if (!cs.exact) cNode.put("x", false): Unit
-          }
-        }
       }
       txn.foreach { case (app, batch) =>
         rec.put("txnApp", app); rec.put("txnBatch", batch)
@@ -2315,6 +2244,32 @@ object TxLog {
     }
     throw new IllegalStateException(
       s"could not commit to $table after $attempts attempts (livelock?)")
+  }
+
+  /** Per-file zone maps, properties and partition columns into a commit
+    * or checkpoint record, each only when non-empty — the one encoder of
+    * what [[parseStats]] and the record readers decode. */
+  private def putTableState(
+      rec: ObjectNode, stats: Map[String, Map[String, ColStats]],
+      props: Map[String, String], partitionCols: Seq[String]): Unit = {
+    if (partitionCols.nonEmpty) {
+      val pArr = rec.putArray("partitionCols"); partitionCols.foreach(pArr.add)
+    }
+    if (props.nonEmpty) {
+      val pNode = rec.putObject("props")
+      props.foreach { case (k, v) => pNode.put(k, v) }
+    }
+    if (stats.nonEmpty) {
+      val stNode = rec.putObject("stats")
+      stats.foreach { case (f, cols) =>
+        val fNode = stNode.putObject(f)
+        cols.foreach { case (c, cs) =>
+          val cNode = fNode.putObject(c)
+          cNode.put("k", cs.kind); cNode.put("mn", cs.min); cNode.put("mx", cs.max)
+          if (!cs.exact) cNode.put("x", false): Unit
+        }
+      }
+    }
   }
 
   /** Atomic create-if-absent: stage to a temp name, hard-link to the
@@ -2339,27 +2294,10 @@ object TxLog {
       rec.put("version", version)
       val arr = rec.putArray("files"); snap.files.foreach(arr.add)
       rec.put("schema", snap.schemaJson)
-      if (snap.stats.nonEmpty) {
-        val stNode = rec.putObject("stats")
-        snap.stats.foreach { case (f, cols) =>
-          val fNode = stNode.putObject(f)
-          cols.foreach { case (c, cs) =>
-            val cNode = fNode.putObject(c)
-            cNode.put("k", cs.kind); cNode.put("mn", cs.min); cNode.put("mx", cs.max)
-            if (!cs.exact) cNode.put("x", false): Unit
-          }
-        }
-      }
+      putTableState(rec, snap.stats, snap.props, snap.partitionCols)
       if (snap.txns.nonEmpty) {
         val txNode = rec.putObject("txns")
         snap.txns.foreach { case (app, batch) => txNode.put(app, batch) }
-      }
-      if (snap.partitionCols.nonEmpty) {
-        val pArr = rec.putArray("partitionCols"); snap.partitionCols.foreach(pArr.add)
-      }
-      if (snap.props.nonEmpty) {
-        val prNode = rec.putObject("props")
-        snap.props.foreach { case (k, v) => prNode.put(k, v) }
       }
       publish(logDir(table), f"$version%020d.checkpoint.json",
         mapper.writeValueAsString(rec)): Unit
@@ -2389,17 +2327,4 @@ object TxLog {
   private def relativize(table: String, p: Path): String =
     Paths.get(table).toAbsolutePath.normalize
       .relativize(p.toAbsolutePath.normalize).toString
-
-  /** Pure decode of an `input_file_name()` URI to a filesystem path
-    * string — THE one normalization both the driver-side relativizer and
-    * changeFeed's executor-side attribution key use (serializable; no
-    * filesystem state). */
-  private[plans] def uriToPath(uri: String): String =
-    if (uri.startsWith("file:")) Paths.get(java.net.URI.create(uri)).toString
-    else uri
-
-  /** `input_file_name()` yields a URI (`file:///…`); map it back to the
-    * table-relative name the log speaks. */
-  private def relativizeUri(table: String, uri: String): String =
-    relativize(table, Paths.get(uriToPath(uri)))
 }

@@ -335,15 +335,6 @@ final case class GraftTable(
   override def partitionSchema(): StructType = StructType(
     snap.partitionCols.map(c => declared(declared.fieldIndex(c))).toArray)
 
-  private def internalValue(v: String, dt: org.apache.spark.sql.types.DataType): Any =
-    org.apache.spark.sql.catalyst.expressions.Cast(
-      org.apache.spark.sql.catalyst.expressions.Literal(
-        org.apache.spark.unsafe.types.UTF8String.fromString(v),
-        org.apache.spark.sql.types.StringType),
-      dt, timeZoneId =
-        Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
-      .eval(null)
-
   override def listPartitionIdentifiers(
       names: Array[String],
       ident0: org.apache.spark.sql.catalyst.InternalRow)
@@ -355,7 +346,7 @@ final case class GraftTable(
     val values: Seq[IndexedSeq[Any]] = snap.files
       .map(f => TxLog.partitionValuesOf(f, snap.partitionCols))
       .distinct
-      .map(pv => ps.fields.map(f => internalValue(pv(f.name), f.dataType)).toIndexedSeq)
+      .map(pv => ps.fields.map(f => TxLog.partitionValue(pv(f.name), f.dataType)).toIndexedSeq)
     val filtered = values.filter { vals =>
       names.zipWithIndex.forall { case (n, i) =>
         val idx = ps.fieldNames.indexWhere(_.equalsIgnoreCase(n))

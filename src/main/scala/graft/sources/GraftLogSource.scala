@@ -239,7 +239,8 @@ private[sources] object GraftLogSource {
     val dataSchema = StructType(
       schema.fields.filterNot(f => snap.partitionCols.contains(f.name)))
     new GraftRelation(table,
-      new GraftFileIndex(table, snap, pinned = asOf.isDefined, partSchema),
+      new GraftFileIndex(table, snap, pinned = asOf.isDefined, partSchema,
+        rel => Seq(TxLog.typedPartitionValues(rel, partSchema))),
       dataSchema, partSchema, schema.fieldNames.toIndexedSeq, parameters)(spark)
   }
 }
@@ -283,20 +284,36 @@ final class GraftRelation(
   }
 }
 
-/** The log-backed FileIndex: `listFiles` starts from the snapshot's live
-  * set and drops every file whose zone map PROVES no row can satisfy the
-  * scan's data filters. Unknown predicate shapes and stat-less files are
-  * conservatively kept — pruning is an optimization, never a correctness
-  * dependency (the filters still run row-level after the scan).
+/** The log-backed FileIndex, the one way table files become a DataFrame:
+  * every `format("graft")` read and every [[TxLog]] read (snapshots,
+  * change and stream batches, the change feed, the DML probes and
+  * targets, compaction, constraint checks) scans through it.
+  *
+  * It lists the snapshot's files in groups that share one row of typed
+  * partition values, and Spark attaches that row to every row it reads
+  * from the group's files. `values` gives each file's rows, in
+  * `partSchema`'s order: for a table read, the typed `col=value`
+  * segments of its path; the change feed adds the file's commit
+  * version, timestamp and change type, the copy-on-write probe its
+  * table-relative name. A file with several rows (one file a change
+  * feed reads for several commits) is read once per row.
+  *
+  * `listFiles` drops every file whose zone map PROVES no row can
+  * satisfy the scan's data filters, then every group the pushed
+  * partition filters reject. Unknown predicate shapes and stat-less
+  * files are conservatively kept — pruning is an optimization, never a
+  * correctness dependency (the filters still run row-level after the
+  * scan).
   *
   * `pinned=false` (a HEAD read) re-resolves the snapshot whenever the
   * log has advanced past the cached version — so a `USING graft` temp
   * view (whose LogicalRelation is built once at view-creation time)
   * serves INSERTs committed after it, the way every table-format
-  * integration must. `pinned=true` (versionAsOf) never moves. */
+  * integration must. `pinned=true` (versionAsOf, every TxLog read)
+  * never moves. */
 final class GraftFileIndex(
     table: String, initial: TxLog.Snapshot, pinned: Boolean,
-    partSchema: StructType = StructType(Nil)) extends FileIndex {
+    partSchema: StructType, values: String => Seq[Seq[Any]]) extends FileIndex {
 
   @volatile private var snap: TxLog.Snapshot = initial
 
@@ -313,9 +330,9 @@ final class GraftFileIndex(
   private def statuses(s: TxLog.Snapshot): Seq[(String, FileStatus)] = {
     // a 0-length FileStatus would scan as an empty file — SILENTLY
     // wrong results for a time travel past vacuum; the shared guard
-    // fails like the TxLog.snapshot read path instead
+    // fails loudly instead
     TxLog.requireLiveFilesExist(table, s)
-    s.files.map { rel =>
+    s.files.distinct.map { rel =>
       val f = new java.io.File(table, rel)
       rel -> new FileStatus(f.length, false, 1, 128L * 1024 * 1024,
         f.lastModified, new HPath(f.toURI))
@@ -326,7 +343,7 @@ final class GraftFileIndex(
   override def partitionSchema: StructType = partSchema
   override def inputFiles: Array[String] =
     statuses(current()).map(_._2.getPath.toString).toArray
-  override def refresh(): Unit = current(): Unit
+  override def refresh(): Unit = statuses(current()): Unit
   override def sizeInBytes: Long = statuses(current()).map(_._2.getLen).sum
 
   override def listFiles(
@@ -337,41 +354,25 @@ final class GraftFileIndex(
       val stats = s.stats.getOrElse(rel, Map.empty)
       dataFilters.forall(f => mayMatch(f, stats))
     }
-    if (partSchema.isEmpty)
-      Seq(PartitionDirectory(InternalRow.empty, keep.map(_._2).toArray))
-    else {
-      // hive layout: group surviving files by their path-borne partition
-      // values, materialize each group's typed InternalRow, and evaluate
-      // the pushed partition filters against it — exact directory-level
-      // pruning, Spark's own first skipping tier, driven by the log
-      val cols = partSchema.fieldNames.toSeq
-      val groups = keep.groupBy { case (rel, _) =>
-        TxLog.partitionValuesOf(rel, cols)
-      }
-      val bound = partitionFilters.map { f =>
-        org.apache.spark.sql.catalyst.expressions.Predicate.createInterpreted(
-          f.transform {
-            case a: AttributeReference =>
-              val i = partSchema.fieldIndex(a.name)
-              BoundReference(i, partSchema(i).dataType, nullable = false)
-          })
-      }
-      groups.toSeq.map { case (pv, files) =>
-        // timeZoneId is required for timezone-aware casts (timestamp
-        // partition columns would otherwise throw at planning time);
-        // write-time type restriction in TxLog keeps the round-trip exact
-        val tz = org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone
-        val values = InternalRow.fromSeq(partSchema.fields.map { f =>
-          Cast(Literal(UTF8String.fromString(pv(f.name)),
-            org.apache.spark.sql.types.StringType), f.dataType,
-            timeZoneId = Some(tz)).eval(null)
-        }.toSeq)
-        values -> files
-      }.filter { case (values, _) => bound.forall(_.eval(values)) }
-        .map { case (values, files) =>
-          PartitionDirectory(values, files.map(_._2).toArray)
-        }
+    // the pushed partition filters evaluate against each group's typed
+    // values — exact group-level pruning, Spark's own first skipping
+    // tier, driven by the log
+    val bound = partitionFilters.map { f =>
+      Predicate.createInterpreted(f.transform {
+        case a: AttributeReference =>
+          val i = partSchema.fieldIndex(a.name)
+          BoundReference(i, partSchema(i).dataType, partSchema(i).nullable)
+      })
     }
+    val groups = scala.collection.mutable.LinkedHashMap
+      .empty[Seq[Any], scala.collection.mutable.ArrayBuffer[FileStatus]]
+    keep.foreach { case (rel, st) =>
+      values(rel).foreach(v =>
+        groups.getOrElseUpdate(v, scala.collection.mutable.ArrayBuffer.empty) += st)
+    }
+    groups.toSeq.map { case (v, files) => InternalRow.fromSeq(v) -> files }
+      .filter { case (row, _) => bound.forall(_.eval(row)) }
+      .map { case (row, files) => PartitionDirectory(row, files.toArray) }
   }
 
   /** Can any row of a file with these zone maps satisfy `e`? Three-valued
@@ -379,6 +380,8 @@ final class GraftFileIndex(
   private def mayMatch(e: Expression, stats: Map[String, TxLog.ColStats]): Boolean = e match {
     case And(l, r) => mayMatch(l, stats) && mayMatch(r, stats)
     case Or(l, r) => mayMatch(l, stats) || mayMatch(r, stats)
+    // the DML conditions' NULL-is-no-match form: true only where `p` is
+    case Coalesce(Seq(p, Literal(false, _))) => mayMatch(p, stats)
     case EqualTo(a: AttributeReference, Literal(v, _)) =>
       bound(stats, a.name, v).forall { case (cs, x) =>
         !lt(cs.kind, x, cs.min) && !lt(cs.kind, cs.max, x) }
